@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_sink_spark.session import release
+
 
 class DeadLetterQueue:
     def __init__(self, spark: SparkSession, path: str):
@@ -36,9 +38,16 @@ class DeadLetterQueue:
         # Dedupe WITHIN the batch too: deadline-expired rows split off
         # before LWW dedup, so one batch can carry per-key duplicates of
         # the same rejection — without this they each append an identical
-        # DLQ entry. Checkpoint so the distinct-reason probe below and
-        # the write don't recompute the (possibly joined) reject lineage.
-        out = out.dropDuplicates(["target_table", "reason", "payload"]).localCheckpoint()
+        # DLQ entry. Checkpoint so the emptiness and reason probes and
+        # the write don't recompute the (possibly joined) reject lineage;
+        # released once the append is done.
+        rendered = out.dropDuplicates(["target_table", "reason", "payload"]).localCheckpoint()
+        try:
+            self._append(rendered)
+        finally:
+            release(rendered)
+
+    def _append(self, out: DataFrame) -> None:
         if os.path.isdir(self.path) and out.isEmpty():
             # Steady-state streaming calls enqueue per micro-batch with a
             # usually-empty reject set: skip the reason probe + append

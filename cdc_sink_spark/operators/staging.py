@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # One bucket per ~17.9 minutes of wall time (2^40 ns); coarse enough to
 # keep directory counts sane at years of retention, fine enough to prune.
@@ -50,7 +51,13 @@ class StagingTable:
         FilterApplied) — returns only unapplied mutations."""
         if not os.path.isdir(self.applied_path):
             return muts
-        applied = self.spark.read.parquet(self.applied_path)
+        # The ledger's schema follows from muts (see mark_applied), so
+        # the read skips a schema-inference job.
+        schema = StructType(
+            [StructField(f"a_{k}", muts.schema[k].dataType) for k in key_cols]
+            + [StructField("a_ts", muts.schema[ts_col].dataType)]
+        )
+        applied = self.spark.read.schema(schema).parquet(self.applied_path)
         cond = F.lit(True)
         for k in key_cols:
             cond = cond & (muts[k] == applied[f"a_{k}"])

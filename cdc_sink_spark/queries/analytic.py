@@ -303,8 +303,10 @@ SELECT user_id, event_id, ts, event_type, value FROM (
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("timestamp_ltz").cast("long") - F.lag(F.col("ts").cast("timestamp_ltz").cast("long"), 1).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+    # Microseconds, not whole seconds: a 1800.5 s gap is a new session.
+    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    gap = us - F.lag(us, 1).over(w)
+    new_sess = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
     return (
         ev.withColumn("new_sess", new_sess)
         .withColumn("session_id", F.sum("new_sess").over(w))
@@ -434,17 +436,19 @@ ASOF LEFT JOIN orders o
 # next — O(n·k) instead of O(n²) per key, and it's a plain shuffle join
 # Catalyst can plan.
 def range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Microseconds, not whole seconds: a pair 300.5 s apart is no match.
+    width = 300 * 1_000_000
     ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.col("ts").cast("timestamp_ltz").cast("long").alias("sec")
+        "user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("us")
     )
-    bucket = (F.col("sec") / 300).cast("long")
+    bucket = F.expr(f"us div {width}")
     left = ev.withColumn("b0", bucket).withColumn(
         "b", F.explode(F.array(F.col("b0") - 1, F.col("b0"), F.col("b0") + 1))
     )
     right = ev.withColumn("b", bucket).select(
         F.col("user_id").alias("r_user"),
         F.col("event_id").alias("r_event"),
-        F.col("sec").alias("r_sec"),
+        F.col("us").alias("r_us"),
         "b",
     )
     pairs = left.join(
@@ -452,7 +456,7 @@ def range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (left.user_id == right.r_user)
         & (left.b == right.b)
         & (left.event_id < right.r_event)
-        & (F.abs(left.sec - right.r_sec) <= 300),
+        & (F.abs(left.us - right.r_us) <= width),
     ).select("user_id", "event_id", "r_event").distinct()
     return pairs.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 

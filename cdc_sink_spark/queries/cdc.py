@@ -20,6 +20,7 @@ from cdc_sink_spark.operators import merge as merge_op
 from cdc_sink_spark.operators import msort, script, sequencer
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations, prepare_mutations
 from cdc_sink_spark.sources import cdcjson
+from cdc_sink_spark.session import release
 from cdc_sink_spark.session import spread as _spread
 
 # Shared SQL fragment: the mutation stream derived from events.
@@ -1160,6 +1161,7 @@ def objstore_scan_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i < len(OBJSTORE_CUTS):  # the tail range has no RESOLVED marker
             with open(_os.path.join(root, f"{i:03d}-zz.RESOLVED"), "w") as fh:
                 fh.write(_json.dumps({"resolved": f"{hi}.0000000000"}) + "\n")
+    release(rendered)
 
     state = {"snap": _target(spark, sf_dir), "frontier": None}
 
@@ -1169,7 +1171,10 @@ def objstore_scan_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state["snap"], typed.withColumnRenamed("tie", "__tie"),
                 ["id"], tie_breaker=["__tie"],
             )
-            state["snap"] = snap.localCheckpoint(eager=True)
+            # Only the latest snapshot stays pinned: the one it replaces
+            # is released as soon as nothing reads it any more.
+            prev, state["snap"] = state["snap"], snap.localCheckpoint(eager=True)
+            release(prev)
         state["frontier"] = hlc
 
     workdir = _tempfile.mkdtemp(prefix="objstore-state-")

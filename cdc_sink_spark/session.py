@@ -52,24 +52,6 @@ def get_spark(app_name: str = "cdc-sink-spark", shuffle_partitions: int | None =
     return builder.getOrCreate()
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver-generated parquet tables as a dict of DataFrames."""
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
-
-
 def _size_bytes(conf_val: str) -> int:
     """Parse a Spark size conf ("134217728", "128m", "1g", "512kb")."""
     s = str(conf_val).strip().lower()
@@ -177,3 +159,20 @@ def table(spark: SparkSession, sf_dir: str, name: str):
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         _TABLE_CACHE[key] = df
     return df
+
+
+def release(*dfs) -> None:
+    """Free the blocks that ``persist()`` or ``localCheckpoint()`` pinned.
+
+    A local checkpoint's blocks otherwise stay in the block manager until
+    the ContextCleaner collects the JVM-side plan, which a long-running
+    stream's per-batch frames may never reach. Pass the checkpointed
+    frame itself, not one derived from it; it is unusable afterwards.
+    ``None`` entries are skipped."""
+    for df in dfs:
+        if df is None:
+            continue
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)

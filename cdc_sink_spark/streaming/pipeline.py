@@ -16,15 +16,18 @@ unstages work at/below the resolved frontier.
 from __future__ import annotations
 
 import os
+import shutil
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cdc_sink_spark.operators import decorators
 from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
+from cdc_sink_spark.session import release
 from cdc_sink_spark.sources import cdcjson
 
 
@@ -139,21 +142,76 @@ def _overwrite_touched_buckets(out: DataFrame, target_path: str, touched: list[i
     then delete touched partitions the apply left EMPTY — dynamic mode
     only replaces partitions PRESENT in the written data, so a bucket
     whose every row was deleted would otherwise keep its stale file
-    (found by the bucketed-vs-legacy property test)."""
-    import shutil
-
-    present = {r[0] for r in out.select("__kb").distinct().collect()}
+    (found by the bucketed-vs-legacy property test). The present set is
+    observed by the write job itself."""
+    obs = Observation()
     (
-        out.write.mode("overwrite")
+        out.observe(obs, F.collect_set("__kb").alias("present"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__kb")
         .parquet(target_path)
     )
-    for b in set(touched) - present:
+    for b in set(touched) - set(obs.get["present"]):
         shutil.rmtree(os.path.join(target_path, f"__kb={b}"), ignore_errors=True)
 
 
-class StreamingApplier:
+class _BatchApplier:
+    """The batch-apply core both foreachBatch appliers share. Per
+    micro-batch: one aggregate over the work set (the only driver action
+    on it), a target read pruned to the touched buckets, one snapshot
+    write and one frontier advance. Subclasses carry target_path,
+    key_cols, n_buckets, checkpoints and target_table."""
+
+    def _stats(self, work: DataFrame):
+        """Row count, max HLC (nanos, logical) and, for a bucketed target,
+        the key buckets the work set touches, in one aggregate."""
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.struct(F.col("__ts.nanos"), F.col("__ts.logical"))).alias("hi"),
+        ]
+        if self.n_buckets:
+            aggs.append(F.collect_set(bucket_col(self.key_cols, self.n_buckets)).alias("touched"))
+        return work.agg(*aggs).first()
+
+    def _target(self, spark: SparkSession, stats) -> DataFrame:
+        target = spark.read.parquet(self.target_path)
+        if self.n_buckets:
+            target = target.filter(F.col("__kb").isin(stats["touched"])).drop("__kb")
+        return target
+
+    def _write(self, snapshot: DataFrame, stats, batch_id: int) -> None:
+        """Bucketed: materialize the touched-bucket rows (their lineage
+        reads the partitions about to be replaced), then replace exactly
+        those partitions. Otherwise the whole-snapshot rewrite, through a
+        side directory for the same reason."""
+        if self.n_buckets:
+            out = snapshot.withColumn(
+                "__kb", bucket_col(self.key_cols, self.n_buckets)
+            ).localCheckpoint(eager=True)
+            try:
+                _overwrite_touched_buckets(out, self.target_path, stats["touched"])
+            finally:
+                release(out)
+            return
+        tmp = self.target_path + f".b{batch_id}"
+        snapshot.write.mode("overwrite").parquet(tmp)
+        snapshot.sparkSession.read.parquet(tmp).write.mode("overwrite").parquet(self.target_path)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    def _advance(self, mark) -> None:
+        """Durable applied-through frontier (staging/checkpoint), called
+        after the snapshot write landed."""
+        if self.checkpoints is None or mark is None:
+            return
+        cur = self.checkpoints.resolved(self.target_table)
+        if cur is None or (mark[0], mark[1]) > cur:
+            # pass cur: advance() then skips its own re-read of the memo log
+            self.checkpoints.advance(self.target_table, mark[0], mark[1], cur=cur)
+
+
+@dataclass(eq=False)
+class StreamingApplier(_BatchApplier):
     """foreachBatch sink: applies each micro-batch onto a parquet target
     snapshot via the batch apply operator (sequencer/immediate shape).
 
@@ -167,109 +225,67 @@ class StreamingApplier:
     ``n_buckets`` the legacy whole-snapshot rewrite remains (the
     local[*] stand-in for a transactional UPSERT; under Delta/Iceberg
     the apply plan is identical either way).
+
+    Per-batch budget: the (ledger-filtered) batch is read once and
+    cached until the batch ends; one aggregate over it is the only
+    driver action (touched buckets plus the max HLC for the frontier);
+    every block the batch pins is released before the call returns.
     """
 
-    def __init__(
-        self,
-        target_path: str,
-        key_cols: list[str],
-        cfg: ApplyConfig | None = None,
-        tie_breaker: list[str] | None = None,
-        dlq=None,
-        target_table: str = "target",
-        checkpoints=None,  # operators.checkpoint.CheckpointGroup
-        staging=None,  # operators.staging.StagingTable: once/marker replay guard
-        n_buckets: int | None = None,  # target partitioned by key bucket
-    ):
-        self.target_path = target_path
-        self.key_cols = key_cols
-        self.cfg = cfg
-        self.tie_breaker = tie_breaker
-        self.dlq = dlq
-        self.target_table = target_table
-        self.checkpoints = checkpoints
-        self.staging = staging
-        self.n_buckets = n_buckets
+    target_path: str
+    key_cols: list[str]
+    cfg: ApplyConfig | None = None
+    tie_breaker: list[str] | None = None
+    dlq: object = None  # operators.dlq.DeadLetterQueue
+    target_table: str = "target"
+    checkpoints: object = None  # operators.checkpoint.CheckpointGroup
+    staging: object = None  # operators.staging.StagingTable: once/marker replay guard
+    n_buckets: int | None = None  # target partitioned by key bucket
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         if self.staging is not None:
             # once-decorator semantics (sequencer/decorators/once.go): a
             # crash between snapshot write and stream-checkpoint commit
             # replays the micro-batch; the applied ledger makes the
             # replay a no-op instead of a double-apply/double-DLQ.
             batch = self.staging.filter_applied(batch, self.key_cols, ts_col="__ts")
-        target = spark.read.parquet(self.target_path)
-        if self.n_buckets:
-            # Partition-prune the target to the touched buckets only.
-            # The distinct bucket list is micro-batch-bounded (≤
-            # n_buckets ints) — the same class of driver action as the
-            # frontier agg below.
-            kb = bucket_col(self.key_cols, self.n_buckets)
-            touched = [
-                r[0] for r in batch.select(kb.alias("__kb")).distinct().collect()
-            ]
-            target = target.filter(F.col("__kb").isin(touched)).drop("__kb")
-        snapshot, rejected = apply_mutations(
-            target, batch, self.key_cols, self.cfg, tie_breaker=self.tie_breaker
-        )
-        if self.dlq is not None or self.staging is not None:
-            # Materialize once: the DLQ append and the applied-ledger
-            # anti-join below both consume it, and its lineage reads
-            # target_path, which the snapshot overwrite replaces.
-            rejected = rejected.localCheckpoint(eager=True)
-        if self.dlq is not None:
-            # Enqueue distributed and unconditionally: the DLQ itself
-            # checkpoints its rendered frame once and early-outs on an
-            # empty reject set, so the steady-state cost here is one
-            # cheap materialization of an (almost always empty) frame.
-            self.dlq.enqueue(rejected, self.target_table)
-        if self.n_buckets:
-            # Touched-bucket rows only; materialize (the lineage reads
-            # the partitions about to be replaced), then replace exactly
-            # those partitions (including deleting emptied ones).
-            out = snapshot.withColumn(
-                "__kb", bucket_col(self.key_cols, self.n_buckets)
-            ).localCheckpoint(eager=True)
-            _overwrite_touched_buckets(out, self.target_path, touched)
-        else:
-            tmp = self.target_path + f".b{batch_id}"
-            snapshot.write.mode("overwrite").parquet(tmp)
-            final = spark.read.parquet(tmp)
-            final.write.mode("overwrite").parquet(self.target_path)
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-        # Collect the batch-max HLC BEFORE mark_applied appends to the
-        # applied ledger this batch's filter_applied anti-join reads:
-        # correctness of the agg must not depend on Spark keeping the
-        # ledger's pre-append file listing cached across the append.
-        mx = None
-        if self.checkpoints is not None:
-            mx = batch.agg(
-                F.max(F.struct(F.col("__ts.nanos"), F.col("__ts.logical"))).alias("m")
-            ).first()["m"]
-        if self.staging is not None:
-            # marker-decorator: record the batch applied only after the
-            # snapshot write landed (crash before this line -> replay is
-            # filtered next time by LWW idempotence, not double-marked).
-            # Rejected mutations stay OUT of the ledger so a DLQ replay
-            # or retry isn't silently dropped by filter_applied.
-            applied = decorators.mark_exclude_rejected(
-                batch, rejected, self.key_cols, ts_col="__ts"
+        # Read once: the aggregate below is the first action and fills the
+        # cache, so the apply, the ledger mark and the frontier all see the
+        # same rows, whatever mark_applied later appends to the ledger.
+        batch = batch.persist()
+        rejected = None
+        try:
+            stats = self._stats(batch)
+            snapshot, rejected = apply_mutations(
+                self._target(batch.sparkSession, stats), batch, self.key_cols, self.cfg,
+                tie_breaker=self.tie_breaker,
             )
-            self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
-        if self.checkpoints is not None:
-            # Durable applied-through frontier (staging/checkpoint): the
-            # batch max HLC becomes the partition mark AFTER the snapshot
-            # write lands, so a restart resumes from a timestamp whose
-            # effects are guaranteed on disk. The agg is micro-batch-sized.
-            if mx is not None:
-                cur = self.checkpoints.resolved(self.target_table)
-                if cur is None or (mx[0], mx[1]) > cur:
-                    # pass cur: advance() then skips its own re-read of
-                    # the memo log (one scan per batch, not three)
-                    self.checkpoints.advance(self.target_table, mx[0], mx[1], cur=cur)
+            if self.dlq is not None or self.staging is not None:
+                # Materialize once: the DLQ append and the applied-ledger
+                # anti-join below both consume it, and its lineage reads
+                # target_path, which the snapshot overwrite replaces.
+                rejected = rejected.localCheckpoint(eager=True)
+            if self.dlq is not None:
+                # Enqueue distributed and unconditionally: the DLQ itself
+                # early-outs on an empty reject set.
+                self.dlq.enqueue(rejected, self.target_table)
+            self._write(snapshot, stats, batch_id)
+            if self.staging is not None:
+                # marker-decorator: record the batch applied only after the
+                # snapshot write landed (crash before this line -> replay is
+                # filtered next time by LWW idempotence, not double-marked).
+                # Rejected mutations stay OUT of the ledger so a DLQ replay
+                # or retry isn't silently dropped by filter_applied.
+                applied = decorators.mark_exclude_rejected(
+                    batch, rejected, self.key_cols, ts_col="__ts"
+                )
+                self.staging.mark_applied(applied, self.key_cols, ts_col="__ts")
+            # The batch max HLC becomes the partition mark AFTER the
+            # snapshot write lands, so a restart resumes from a timestamp
+            # whose effects are guaranteed on disk.
+            self._advance(stats["hi"])
+        finally:
+            release(batch, rejected)
 
 
 def run_pipeline_once(
@@ -300,7 +316,8 @@ def run_pipeline_once(
     q.awaitTermination()
 
 
-class ModeSwitchingApplier:
+@dataclass(eq=False)
+class ModeSwitchingApplier(_BatchApplier):
     """switcher.go as a foreachBatch policy: a meta-sequencer that picks
     the apply mode PER MICRO-BATCH from live backlog pressure.
 
@@ -325,36 +342,22 @@ class ModeSwitchingApplier:
     reference's staged-mutation sweep.
     """
 
-    def __init__(
-        self,
-        target_path: str,
-        key_cols: list[str],
-        parked_path: str,
-        cfg: ApplyConfig | None = None,
-        tie_breaker: list[str] | None = None,
-        backlog_limit: int = 10_000,
-        lag_limit_nanos: int = 60 * 1_000_000_000,
-        resolved_dir: str | None = None,
-        checkpoints=None,
-        target_table: str = "target",
-        n_buckets: int | None = None,  # target partitioned by key bucket
-        dlq=None,  # DeadLetterQueue for FINAL (cas/deadline) rejections;
-        # None -> an implicit durable queue at parked_path + "_dlq" is
-        # created on first use (finals are never silently dropped)
-    ):
-        self.target_path = target_path
-        self.key_cols = key_cols
-        self.parked_path = parked_path
-        self.cfg = cfg
-        self.tie_breaker = tie_breaker
-        self.backlog_limit = backlog_limit
-        self.lag_limit_nanos = lag_limit_nanos
-        self.resolved_dir = resolved_dir
-        self.checkpoints = checkpoints
-        self.target_table = target_table
-        self.n_buckets = n_buckets
-        self.dlq = dlq
-        self.mode_history: list[tuple[int, str]] = []
+    target_path: str
+    key_cols: list[str]
+    parked_path: str
+    cfg: ApplyConfig | None = None
+    tie_breaker: list[str] | None = None
+    backlog_limit: int = 10_000
+    lag_limit_nanos: int = 60 * 1_000_000_000
+    resolved_dir: str | None = None
+    checkpoints: object = None
+    target_table: str = "target"
+    n_buckets: int | None = None  # target partitioned by key bucket
+    # DeadLetterQueue for FINAL (cas/deadline) rejections; None -> an
+    # implicit durable queue at parked_path + "_dlq" is created on first
+    # use (finals are never silently dropped)
+    dlq: object = None
+    mode_history: list[tuple[int, str]] = field(default_factory=list, init=False)
 
     def _resolved_stamps(self, spark: SparkSession) -> DataFrame | None:
         if self.resolved_dir is None or not os.path.isdir(self.resolved_dir):
@@ -370,126 +373,104 @@ class ModeSwitchingApplier:
         from cdc_sink_spark.operators import sequencer
 
         spark = batch.sparkSession
-        # Materialize once: counted for the mode decision, unioned into
-        # the work set, and (post-overwrite) written back as parked.
-        batch = batch.localCheckpoint(eager=True)
         if os.path.isdir(self.parked_path):
             parked = spark.read.schema(batch.schema).parquet(self.parked_path)
         else:
             parked = batch.limit(0)
-        work = batch.unionByName(parked)
-        # ONE micro-batch-sized agg feeds the whole mode decision
-        # (backlog depth + newest mutation ts), not a count() plus a
-        # separate max() pass over the same work set.
-        stats = work.agg(
-            F.count(F.lit(1)).alias("n"), F.max("__ts.nanos").alias("hi")
-        ).first()
-        backlog = stats["n"]
-        resolved = self._resolved_stamps(spark)
-        lag = 0
-        if resolved is not None:
-            # Resolved-timestamp lag: newest mutation vs newest frontier
-            # stamp (group.go flips to besteffort when the frontier falls
-            # too far behind the incoming feed).
-            hi = stats["hi"] or 0
-            fr = resolved.agg(F.max("ts.nanos")).first()[0] or 0
-            lag = max(0, hi - fr)
-        mode = sequencer.switcher_mode(
-            backlog, lag, backlog_limit=self.backlog_limit,
-            lag_limit_nanos=self.lag_limit_nanos,
-        )
-        if mode == "serial" and resolved is None:
-            mode = "immediate"  # no frontier feed: core degenerates
-        self.mode_history.append((batch_id, mode))
-        target = spark.read.parquet(self.target_path)
-        if self.n_buckets:
-            # Touched buckets come from the WORK set (batch ∪ parked):
-            # any parked row can drain this batch, so its bucket counts
-            # as touched. The bucket list is work-sized, bounded by
-            # n_buckets distinct ints.
-            kb = bucket_col(self.key_cols, self.n_buckets)
-            touched = [r[0] for r in work.select(kb.alias("__kb")).distinct().collect()]
-            target = target.filter(F.col("__kb").isin(touched)).drop("__kb")
-        if mode == "serial":
-            # Plain LWW collapses all covered windows into one apply;
-            # with CAS configured the per-window ratchet is semantic —
-            # and with a TOAST sentinel the placeholder must resolve
-            # against the PRIOR WINDOW's winner, not the pre-batch
-            # target — so either routes through the grouped per-key
-            # window fold instead.
-            collapse = not (
-                self.cfg
-                and (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
+        # Read once: the work set (batch ∪ parked) is cached by its first
+        # action, the one aggregate that feeds the whole mode decision
+        # (backlog depth, newest mutation ts) and the bucket routing.
+        work = batch.unionByName(parked).persist()
+        kept = None
+        try:
+            stats = self._stats(work)
+            resolved = self._resolved_stamps(spark)
+            fr, lag = None, 0
+            if resolved is not None:
+                # Resolved-timestamp lag: newest mutation vs newest frontier
+                # stamp (group.go flips to besteffort when the frontier falls
+                # too far behind the incoming feed). The same max is the
+                # frontier advanced after the write.
+                fr = resolved.agg(
+                    F.max(F.struct(F.col("ts.nanos"), F.col("ts.logical")))
+                ).first()[0]
+                hi = stats["hi"][0] if stats["hi"] else 0
+                lag = max(0, hi - (fr[0] if fr else 0))
+            mode = sequencer.switcher_mode(
+                stats["n"], lag, backlog_limit=self.backlog_limit,
+                lag_limit_nanos=self.lag_limit_nanos,
             )
-            snapshot, left_over = sequencer.seq_serial(
-                target, work, resolved, self.key_cols, self.cfg,
-                collapse_windows=collapse, ts_col="__ts",
-                tie_breaker=self.tie_breaker,
-            )
-        else:
-            # "besteffort", and "immediate" (no resolved feed yet) which
-            # is best-effort without an FK parent: apply-and-park-failures.
-            snapshot, left_over = sequencer.seq_besteffort(
-                target, work, self.key_cols, cfg=self.cfg, ts_col="__ts",
-                tie_breaker=self.tie_breaker, with_reason=True,
-            )
-        left_over = left_over.localCheckpoint(eager=True)
-        if "__park_reason" in left_over.columns:
-            # CAS- and deadline-rejected mutations are FINAL under this
-            # class's own semantics (the CAS ratchet only rises, time only
-            # moves forward — see seq_serial's rejection contract), so
-            # re-parking them would re-apply and re-park the same rows
-            # every micro-batch forever AND inflate the backlog count that
-            # feeds switcher_mode (a sustained CAS conflict could latch
-            # the pipeline into besteffort permanently). Route them to the
-            # DLQ (idempotent enqueue — crash-replayed batches won't
-            # duplicate entries); only genuinely retryable parks (FK
-            # orphans, serial's uncovered pending) go back to the store.
-            is_final = F.col("__park_reason").isin("cas", "deadline")
-            final = left_over.filter(is_final)
-            left_over = left_over.filter(
-                ~F.coalesce(is_final, F.lit(False))
-            ).drop("__park_reason")
-            if self.dlq is None and not final.isEmpty():
-                # No DLQ configured but final rejections occurred: default
-                # to a durable implicit DLQ beside the parked store rather
-                # than dropping rows (a restart would zero any in-memory
-                # counter — CAS/deadline rejects must stay inspectable and
-                # replayable, exactly like the pre-r13 parked store, just
-                # without the infinite re-apply loop).
-                from cdc_sink_spark.operators.dlq import DeadLetterQueue
-
-                self.dlq = DeadLetterQueue(spark, self.parked_path + "_dlq")
-            if self.dlq is not None:
-                self.dlq.enqueue(
-                    final.withColumnRenamed("__park_reason", "__reason"),
-                    self.target_table,
+            if mode == "serial" and resolved is None:
+                mode = "immediate"  # no frontier feed: core degenerates
+            self.mode_history.append((batch_id, mode))
+            # Touched buckets come from the WORK set: any parked row can
+            # drain this batch, so its bucket counts as touched.
+            target = self._target(spark, stats)
+            if mode == "serial":
+                # Plain LWW collapses all covered windows into one apply;
+                # with CAS configured the per-window ratchet is semantic —
+                # and with a TOAST sentinel the placeholder must resolve
+                # against the PRIOR WINDOW's winner, not the pre-batch
+                # target — so either routes through the grouped per-key
+                # window fold instead.
+                collapse = not (
+                    self.cfg
+                    and (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
                 )
-        if self.n_buckets:
-            out = snapshot.withColumn(
-                "__kb", bucket_col(self.key_cols, self.n_buckets)
-            ).localCheckpoint(eager=True)
-            _overwrite_touched_buckets(out, self.target_path, touched)
-        else:
-            tmp = self.target_path + f".b{batch_id}"
-            snapshot.write.mode("overwrite").parquet(tmp)
-            spark.read.parquet(tmp).write.mode("overwrite").parquet(self.target_path)
-            import shutil
+                snapshot, left_over = sequencer.seq_serial(
+                    target, work, resolved, self.key_cols, self.cfg,
+                    collapse_windows=collapse, ts_col="__ts",
+                    tie_breaker=self.tie_breaker,
+                )
+            else:
+                # "besteffort", and "immediate" (no resolved feed yet) which
+                # is best-effort without an FK parent: apply-and-park-failures.
+                snapshot, left_over = sequencer.seq_besteffort(
+                    target, work, self.key_cols, cfg=self.cfg, ts_col="__ts",
+                    tie_breaker=self.tie_breaker, with_reason=True,
+                )
+            # Materialized: written back over the parked store it reads.
+            left_over = kept = left_over.localCheckpoint(eager=True)
+            if "__park_reason" in left_over.columns:
+                # CAS- and deadline-rejected mutations are FINAL under this
+                # class's own semantics (the CAS ratchet only rises, time only
+                # moves forward — see seq_serial's rejection contract), so
+                # re-parking them would re-apply and re-park the same rows
+                # every micro-batch forever AND inflate the backlog count that
+                # feeds switcher_mode (a sustained CAS conflict could latch
+                # the pipeline into besteffort permanently). Route them to the
+                # DLQ (idempotent enqueue — crash-replayed batches won't
+                # duplicate entries); only genuinely retryable parks (FK
+                # orphans, serial's uncovered pending) go back to the store.
+                is_final = F.col("__park_reason").isin("cas", "deadline")
+                final = left_over.filter(is_final)
+                left_over = left_over.filter(
+                    ~F.coalesce(is_final, F.lit(False))
+                ).drop("__park_reason")
+                if self.dlq is None and not final.isEmpty():
+                    # No DLQ configured but final rejections occurred: default
+                    # to a durable implicit DLQ beside the parked store rather
+                    # than dropping rows (a restart would zero any in-memory
+                    # counter — CAS/deadline rejects must stay inspectable and
+                    # replayable, exactly like the pre-r13 parked store, just
+                    # without the infinite re-apply loop).
+                    from cdc_sink_spark.operators.dlq import DeadLetterQueue
 
-            shutil.rmtree(tmp, ignore_errors=True)
-        # The parked store stays a whole-store rewrite: it is
-        # FAILURE-sized (shrinks to zero in steady state), so the rewrite
-        # volume is already proportional to the parked backlog, never to
-        # the table.
-        left_over.write.mode("overwrite").parquet(self.parked_path)
-        if self.checkpoints is not None and resolved is not None:
-            fr = resolved.agg(
-                F.max(F.struct(F.col("ts.nanos"), F.col("ts.logical")))
-            ).first()[0]
-            if fr is not None:
-                cur = self.checkpoints.resolved(self.target_table)
-                if cur is None or (fr[0], fr[1]) > cur:
-                    self.checkpoints.advance(self.target_table, fr[0], fr[1], cur=cur)
+                    self.dlq = DeadLetterQueue(spark, self.parked_path + "_dlq")
+                if self.dlq is not None:
+                    self.dlq.enqueue(
+                        final.withColumnRenamed("__park_reason", "__reason"),
+                        self.target_table,
+                    )
+            self._write(snapshot, stats, batch_id)
+            # The parked store stays a whole-store rewrite: it is
+            # FAILURE-sized (shrinks to zero in steady state), so the rewrite
+            # volume is already proportional to the parked backlog, never to
+            # the table.
+            left_over.write.mode("overwrite").parquet(self.parked_path)
+            self._advance(fr)
+        finally:
+            release(work, kept)
 
 
 def streaming_dedup_time_key(

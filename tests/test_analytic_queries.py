@@ -24,8 +24,7 @@ def duck(sf_dir):
     return con
 
 
-@pytest.mark.parametrize("name", sorted(analytic.QUERIES))
-def test_query_matches_oracle(spark, sf_dir, duck, name):
+def _assert_matches_oracle(spark, sf_dir, duck, name):
     sdf = analytic.QUERIES[name](spark, sf_dir)
     srows = sdf.collect()
     res = duck.execute(analytic.ORACLES[name])
@@ -52,6 +51,46 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
         return sorted(out)
 
     assert canon([tuple(r) for r in srows], sdf.columns) == canon(drows, dcols), name
+
+
+@pytest.mark.parametrize("name", sorted(analytic.QUERIES))
+def test_query_matches_oracle(spark, sf_dir, duck, name):
+    _assert_matches_oracle(spark, sf_dir, duck, name)
+
+
+@pytest.mark.parametrize("name", ["events_sessionize", "range_join_bucketed"])
+def test_subsecond_gaps_match_oracle(spark, tmp_path, name):
+    """The oracles compare fractional epoch(ts). Each user's pair sits
+    just past the threshold (1800.5 s for sessions, 300.5 s for the
+    range join) while the whole-second floors differ by exactly the
+    threshold, so truncating to seconds merges the session / keeps the
+    pair. User 3's pair (299.5 s) is inside both thresholds."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 200_000)
+    gaps = {1: 1800.5, 2: 300.5, 3: 299.5}
+    rows = []
+    for user, gap in gaps.items():
+        for t in (t0, t0 + dt.timedelta(seconds=gap)):
+            rows.append((len(rows), user, t))
+    event_id, user_id, ts = zip(*rows)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(event_id, pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array(user_id, pa.int64()),
+            "event_type": pa.array(["click"] * len(rows)),
+            "value": pa.array([1.0] * len(rows)),
+            "props": pa.array(['{"k": 1}'] * len(rows)),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'")
+    _assert_matches_oracle(spark, str(tmp_path), con, name)
 
 
 def test_q1_plan_shape(spark, sf_dir):

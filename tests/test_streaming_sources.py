@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -1219,3 +1220,112 @@ def test_shared_feed_renders_once_and_invalidates(spark, tmp_path, monkeypatch):
         os.remove(os.path.dirname(f1) + ".lock")
     except OSError:
         pass
+
+
+def _pinned(spark) -> set[int]:
+    """Ids of the RDDs holding blocks (persisted or locally checkpointed)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_streaming_applier_reads_batch_once(spark, tmp_path):
+    """The full-featured applier (staging, DLQ, checkpoints, buckets)
+    reads its micro-batch from the source once: the source reports each
+    line of the single input file as one input row."""
+    from cdc_sink_spark.operators.checkpoint import CheckpointGroup
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.memo import Memo
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    feed, target = str(tmp_path / "feed"), str(tmp_path / "target")
+    lines = [
+        f'{{"after":{{"id":{i % 7},"v":"v{i}"}},"updated":"{i + 1}.0","key":[{i % 7}]}}'
+        for i in range(20)
+    ]
+    _write_feed(feed, lines)
+    seed = spark.createDataFrame([Row(id=i, v="seed") for i in range(16)], "id bigint, v string")
+    pipeline.init_bucketed_target(seed, target, ["id"], 4)
+    ckpts = CheckpointGroup(Memo(spark, str(tmp_path / "memo")), "g")
+    applier = pipeline.StreamingApplier(
+        target, ["id"], dlq=DeadLetterQueue(spark, str(tmp_path / "dlq")),
+        checkpoints=ckpts, staging=StagingTable(spark, str(tmp_path / "staging")),
+        n_buckets=4, target_table="t",
+    )
+    typed = pipeline.stream_typed_mutations(
+        pipeline.stream_ndjson(spark, feed), "id bigint, v string", ["id"]
+    )
+    q = (
+        typed.writeStream.foreachBatch(applier)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert [p["batchId"] for p in q.recentProgress] == [0]
+    assert q.lastProgress["numInputRows"] == len(lines)
+    out = {r.id: r.v for r in spark.read.parquet(target).drop("__kb").collect()}
+    assert out == {**{i: "seed" for i in range(16)}, **{i % 7: f"v{i}" for i in range(13, 20)}}
+    assert ckpts.resolved("t") == (20, 0)
+
+
+@pytest.mark.parametrize("kind", ["streaming", "mode_switch"])
+def test_appliers_release_per_batch_blocks(spark, tmp_path, kind):
+    """Neither applier leaves a persisted or checkpointed block behind
+    after a micro-batch: the set of block-holding RDDs after each batch
+    is the set before it, with CAS rejects (to the DLQ) and, for the
+    mode switcher, parked rows in play."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+    from cdc_sink_spark.operators.checkpoint import CheckpointGroup
+    from cdc_sink_spark.operators.dlq import DeadLetterQueue
+    from cdc_sink_spark.operators.memo import Memo
+    from cdc_sink_spark.operators.staging import StagingTable
+
+    schema = "id bigint, v bigint, __ts struct<nanos:long, logical:int>, __deleted boolean"
+
+    def batch(n0):
+        return spark.createDataFrame(
+            [Row(id=i % 5, v=(i * 7) % 11, __ts=Row(nanos=n0 + i, logical=0), __deleted=False)
+             for i in range(10)],
+            schema,
+        )
+
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame([Row(id=i, v=5) for i in range(8)], "id bigint, v bigint")
+    pipeline.init_bucketed_target(seed, target, ["id"], 4)
+    dlq = DeadLetterQueue(spark, str(tmp_path / "dlq"))
+    ckpts = CheckpointGroup(Memo(spark, str(tmp_path / "memo")), "g")
+    cas = ApplyConfig(cas_columns=["v"])
+    if kind == "streaming":
+        applier = pipeline.StreamingApplier(
+            target, ["id"], cas, dlq=dlq, checkpoints=ckpts,
+            staging=StagingTable(spark, str(tmp_path / "staging")), n_buckets=4,
+        )
+    else:
+        resolved = tmp_path / "resolved"
+        resolved.mkdir()
+        (resolved / "r.json").write_text('{"resolved": "5.0000000000"}\n')
+        # Batch 0 runs serial and parks its uncovered tail; batch 1 lags
+        # the frontier by more than the limit and runs best-effort.
+        applier = pipeline.ModeSwitchingApplier(
+            target, ["id"], str(tmp_path / "parked"), cas, lag_limit_nanos=5,
+            resolved_dir=str(resolved), checkpoints=ckpts, n_buckets=4, dlq=dlq,
+        )
+    for batch_id in range(2):
+        before = _pinned(spark)
+        applier(batch(10 * batch_id), batch_id)
+        assert _pinned(spark) - before == set(), batch_id
+        if kind == "mode_switch" and batch_id == 0:
+            assert spark.read.parquet(str(tmp_path / "parked")).count() > 0
+    assert dlq.read().count() > 0
+    if kind == "mode_switch":
+        assert applier.mode_history == [(0, "serial"), (1, "besteffort")]
+
+
+def test_objstore_scan_apply_pins_only_its_result(spark, sf_dir):
+    """The objstore query releases its rendered feed and every superseded
+    snapshot checkpoint; only the returned snapshot stays pinned."""
+    from cdc_sink_spark.queries import cdc
+
+    before = _pinned(spark)
+    snap = cdc.objstore_scan_apply(spark, sf_dir)
+    assert len(_pinned(spark) - before) <= 1
+    assert snap.count() > 0
