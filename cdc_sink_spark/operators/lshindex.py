@@ -1,34 +1,31 @@
 """Persisted LSH band index: the steady-state shape of incremental dedup.
 
 A production near-dup pipeline does NOT re-fingerprint its corpus per
-crawl batch: yesterday's band index is already materialized, and a new
-batch (a) computes signatures for ITS documents only, (b) equi-joins
-the persisted index on the band key, and (c) appends its own bands so
-tomorrow's batch sees it. Per-batch cost is O(batch) compute + one
-index read — never O(corpus) signature recompute.
+crawl batch: the corpus's band index is already materialized, and a new
+batch computes signatures for ITS documents only and equi-joins the
+persisted index on the band key. Per-batch cost is O(batch) compute +
+one index read — never O(corpus) signature recompute.
 
 Spark-first persistence: the grouped buckets are written as a BUCKETED
 parquet table clustered on the full band key, so the steady-state probe
 join shuffles ONLY the batch side — the index side is read pre-hashed
-into its buckets (no Exchange above its scan). Appends land in a plain
-"delta" directory (bucketed tables can't be appended without a shuffle
-per batch); ``compact()`` folds deltas back into the bucketed base the
-same way the memo store self-compacts. The reference has no analogue
-(this is a training-data operator); the LSH math is shared verbatim
-with queries/textops.py's full-corpus path.
+into its buckets (no Exchange above its scan). The index is build-once
+and immutable (operators/artifact.py): a changed corpus or LSH
+parameterization publishes a new version beside the old one, and a
+probe keeps reading the version its instance built or found. The
+reference has no analogue (this is a training-data operator); the LSH
+math is shared verbatim with queries/textops.py's full-corpus path.
 """
 
 from __future__ import annotations
 
-import contextlib
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_sink_spark.functions import text as T
+from cdc_sink_spark.operators import artifact
 
 KEYS = ["band", *[f"k{r}" for r in range(T.LSH_ROWS)]]
 
@@ -71,18 +68,18 @@ def band_rows(sigs: DataFrame) -> DataFrame:
 
 
 class BandIndex:
-    """A persisted LSH band index under ``path``.
+    """A persisted LSH band index under the artifact root ``path``.
 
-    Layout::
+    Layout (see operators/artifact.py)::
 
-        path/base/   bucketed parquet table (CLUSTERED BY the band key)
-        path/delta/  plain parquet appends awaiting compaction
-        path/_meta.json  build fingerprint (corpus id + LSH params)
+        path/<version>/base/        bucketed parquet table (CLUSTERED BY the band key)
+        path/<version>/_meta.json   build fingerprint (LSH params + corpus id)
 
-    The bucketed base is registered in the session catalog as
-    ``table_name``; a fresh session re-registers it from the DDL (the
-    in-memory catalog forgets bucketing metadata across sessions, the
-    files don't).
+    Each version's base is registered in the session catalog as
+    ``<table_name>_<version>``, so a probe always reads the files of the
+    version this instance built or found; a fresh session re-registers
+    it from the DDL (the in-memory catalog forgets bucketing metadata
+    across sessions, the files don't).
     """
 
     def __init__(
@@ -98,66 +95,27 @@ class BandIndex:
         self.table_name = table_name
         self.n_buckets = n_buckets
         self.bucket_cap = bucket_cap
+        # Set by build(): the version dir this instance reads, and the
+        # catalog name its base is registered under.
+        self.version: str | None = None
+        self.table: str | None = None
 
-    # ------------------------------------------------------------ meta
-    @property
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_meta.json")
-
-    def _params(self) -> dict:
-        return {
+    def _want(self, fingerprint: dict | None) -> dict:
+        params = {
             "n_hashes": T.N_HASHES,
             "bands": T.LSH_BANDS,
             "shingle_n": T.SHINGLE_N,
             "bucket_cap": self.bucket_cap,
             "n_buckets": self.n_buckets,
         }
+        return {"params": params, "fingerprint": fingerprint}
 
     def exists(self, fingerprint: dict | None = None) -> bool:
-        """True iff a built index is present AND (when given) its build
-        fingerprint matches — a changed corpus or LSH parameterization
-        invalidates the index rather than silently serving stale
-        buckets."""
-        if not os.path.isfile(self._meta_path):
-            return False
-        try:
-            with open(self._meta_path) as f:
-                meta = json.load(f)
-        except (OSError, ValueError):
-            return False  # truncated/corrupt meta == stale index: rebuild
-        if meta.get("params") != self._params():
-            return False
-        return fingerprint is None or meta.get("fingerprint") == fingerprint
+        """True iff a version built for ``fingerprint`` and the current
+        LSH parameterization is published — a changed corpus or LSH
+        parameterization never silently serves stale buckets."""
+        return artifact.lookup(self.path, self._want(fingerprint)) is not None
 
-    # ------------------------------------------------------------ lock
-    @contextlib.contextmanager
-    def _mutation_lock(self):
-        """Cross-process lock around build()/compact(): two sessions
-        probing the same sf_dir must not race a build against a
-        concurrent rmtree of the shared warehouse path.
-
-        ``flock`` on a persistent lock file, NOT a create/unlink PID
-        file: the kernel releases the lock when the holder dies (no
-        stale-age heuristic that could steal the lock from a live
-        builder mid-``saveAsTable``), acquisition blocks for as long as
-        a legitimate holder runs, and there is no stat-then-remove
-        window where two waiters could both claim a stale lock. The
-        lock file itself is never unlinked (unlink would re-open the
-        classic flock race: a waiter holding an fd to the unlinked
-        inode locks a file nobody else can see)."""
-        import fcntl
-
-        lock = self.path + ".lock"
-        os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-    # ----------------------------------------------------------- build
     def _grouped(self, docs: DataFrame) -> DataFrame:
         return (
             band_rows(signatures(docs))
@@ -167,139 +125,53 @@ class BandIndex:
         )
 
     def _register(self) -> None:
-        """(Re-)register the bucketed base table in the session catalog.
-        The column DDL is derived from the written files' OWN footer
-        schema (a hard-coded doc_id:bigint would corrupt reads for any
-        corpus whose doc_id is a different type); only the bucket spec
-        is ours to re-assert."""
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-        base = os.path.join(self.path, "base")
+        """(Re-)register this version's bucketed base in the session
+        catalog. The column DDL is derived from the written files' OWN
+        footer schema (a hard-coded doc_id:bigint would corrupt reads for
+        any corpus whose doc_id is a different type); only the bucket
+        spec is ours to re-assert."""
+        self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
+        base = os.path.join(self.version, "base")
         scm = self.spark.read.parquet(base).schema  # footer read, no scan
         cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in scm.fields)
         cluster = ", ".join(KEYS)
         self.spark.sql(
-            f"CREATE TABLE {self.table_name} ({cols}) "
+            f"CREATE TABLE {self.table} ({cols}) "
             f"USING PARQUET CLUSTERED BY ({cluster}) INTO {self.n_buckets} BUCKETS "
             f"LOCATION '{base}'"
         )
 
-    def build(
-        self,
-        docs: DataFrame,
-        fingerprint: dict | None = None,
-        skip_if_current: bool = False,
-    ) -> bool:
-        """Full build: ONE signature pass over the existing corpus, then
-        a bucketed write clustered on the band key. Run once (or per
-        compaction) — never per batch.
+    def build(self, docs: DataFrame, fingerprint: dict | None = None) -> bool:
+        """Find the published version for ``fingerprint``, or build it:
+        ONE signature pass over the corpus, then a bucketed write
+        clustered on the band key. Run once per corpus — never per
+        batch. Returns True when a build actually ran."""
+        want = self._want(fingerprint)
+        self.table = f"{self.table_name}_{artifact.version(want)}"
 
-        ``skip_if_current=True`` re-checks ``exists(fingerprint)`` AFTER
-        taking the mutation lock and returns False without building if a
-        concurrent session already built the same index — callers'
-        check-then-build is racy without this (two sessions could both
-        see exists()==False and then fight over the shared path).
-        Returns True when a build actually ran."""
-        with self._mutation_lock():
-            if skip_if_current and self.exists(fingerprint):
-                return False
-            if os.path.isdir(self.path):
-                shutil.rmtree(self.path)
-            os.makedirs(self.path, exist_ok=True)
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
+        def write(tmp: str) -> None:
+            # saveAsTable is the only bucketed writer; the table it
+            # registers points into the temp dir and is re-registered
+            # at the published location below.
+            self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
             (
                 self._grouped(docs)
                 .write.bucketBy(self.n_buckets, KEYS[0], *KEYS[1:])
-                .option("path", os.path.join(self.path, "base"))
-                .saveAsTable(self.table_name)
+                .option("path", os.path.join(tmp, "base"))
+                .saveAsTable(self.table)
             )
-            with open(self._meta_path, "w") as f:
-                json.dump({"params": self._params(), "fingerprint": fingerprint}, f)
-            return True
+            self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
 
-    # ---------------------------------------------------------- append
-    @property
-    def _delta_dir(self) -> str:
-        return os.path.join(self.path, "delta")
-
-    def append(self, docs: DataFrame) -> None:
-        """Add a batch's bands as a plain-parquet delta (O(batch)); the
-        bucketed base is untouched. Deltas are grouped per-append (the
-        cap applies within the append; cross-delta bucket growth is
-        bounded by compaction cadence, the memo-store trade)."""
-        self._grouped(docs).write.mode("append").parquet(self._delta_dir)
-
-    def compact(self, fingerprint: dict | None = None) -> None:
-        """Fold deltas into the bucketed base: one read of base+delta,
-        one regroup, one bucketed rewrite — run on a cadence, not per
-        batch.
-
-        Crash-safe ordering: the merged rewrite lands in a SIDE
-        directory first, the meta file is removed (turning any crash
-        below into a clean exists()==False -> rebuild, never a silently
-        empty index), then the directories swap and the meta is written
-        back — the meta file is the commit point."""
-        if not os.path.isdir(self._delta_dir):
-            return
-        with self._mutation_lock():
-            self._compact_locked(fingerprint)
-
-    def _compact_locked(self, fingerprint: dict | None = None) -> None:
-        if not os.path.isdir(self._delta_dir):
-            return  # a concurrent compact drained it while we waited
-        merged = (
-            self._base_df()
-            .unionByName(self.spark.read.parquet(self._delta_dir))
-            .select(*KEYS, F.explode("idx").alias("m"))
-            .groupBy(*KEYS)
-            .agg(F.collect_list("m").alias("idx"))
-            .filter(F.size("idx") <= self.bucket_cap)
-        )
-        base = os.path.join(self.path, "base")
-        tmp = base + ".compact"
-        tmp_table = f"{self.table_name}__compact"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        (
-            merged.write.bucketBy(self.n_buckets, KEYS[0], *KEYS[1:])
-            .option("path", tmp)
-            .saveAsTable(tmp_table)
-        )
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        meta = None
-        if os.path.isfile(self._meta_path):
-            with open(self._meta_path) as f:
-                meta = f.read()
-            os.remove(self._meta_path)  # invalidate: crash below -> rebuild
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table_name}")
-        old = base + ".old"
-        os.rename(base, old)
-        os.rename(tmp, base)
-        shutil.rmtree(old)
-        shutil.rmtree(self._delta_dir)
-        self._register()
-        if fingerprint is not None:
-            with open(self._meta_path, "w") as f:
-                json.dump({"params": self._params(), "fingerprint": fingerprint}, f)
-        elif meta is not None:
-            with open(self._meta_path, "w") as f:
-                f.write(meta)
-
-    # ----------------------------------------------------------- probe
-    def _base_df(self) -> DataFrame:
-        if not any(
-            t.name == self.table_name
-            for t in self.spark.catalog.listTables()
-        ):
+        self.version, built = artifact.publish(self.path, want, write)
+        if built or not self.spark.catalog.tableExists(self.table):
             self._register()
-        return self.spark.table(self.table_name)
+        return built
 
     def probe(self, docs: DataFrame) -> DataFrame:
         """(new_id, old_id, est): candidate matches for a NEW batch
         against the persisted index. Signatures are computed for the
         batch ONLY; the join on the band key shuffles only the batch
-        side (the base is bucketed on exactly these keys). Delta
-        buckets, if any, join the same batch bands."""
+        side (the base is bucketed on exactly these keys)."""
         return self.probe_signatures(signatures(docs))
 
     def probe_signatures(self, sigs: DataFrame) -> DataFrame:
@@ -307,15 +179,6 @@ class BandIndex:
         also need the signature frame (e.g. to list surviving batch
         docs) compute it once, checkpoint it, and share it instead of
         paying the shingle+minhash pass twice."""
-        # Checkpoint the batch bands ONLY when a delta dir exists (r14):
-        # with no delta there is exactly one consumer (the base-table
-        # join), and the checkpoint was a pure waste — under AQE a lazy
-        # localCheckpoint still pays synchronous planning plus all-but-
-        # final stage execution at CONSTRUCTION time (~0.4 s measured),
-        # a per-probe cost in the steady state the index exists for.
-        bands = band_rows(sigs)
-        if os.path.isdir(self._delta_dir):
-            bands = bands.localCheckpoint(eager=False)
         est = (
             F.size(
                 F.filter(
@@ -325,19 +188,14 @@ class BandIndex:
             )
             / F.lit(T.N_HASHES)
         )
-
-        def hits(index_df: DataFrame) -> DataFrame:
-            return (
-                bands.join(index_df, KEYS)
-                .select("doc_id", "sig", F.explode("idx").alias("m"))
-                .select(
-                    F.col("doc_id").alias("new_id"),
-                    F.col("m.doc_id").alias("old_id"),
-                    est.alias("est"),
-                )
+        return (
+            band_rows(sigs)
+            .join(self.spark.table(self.table), KEYS)
+            .select("doc_id", "sig", F.explode("idx").alias("m"))
+            .select(
+                F.col("doc_id").alias("new_id"),
+                F.col("m.doc_id").alias("old_id"),
+                est.alias("est"),
             )
-
-        out = hits(self._base_df())
-        if os.path.isdir(self._delta_dir):
-            out = out.unionByName(hits(self.spark.read.parquet(self._delta_dir)))
-        return out.dropDuplicates(["new_id", "old_id"])
+            .dropDuplicates(["new_id", "old_id"])
+        )

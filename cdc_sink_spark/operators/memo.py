@@ -8,12 +8,20 @@ Spark-first: the memo is a tiny versioned parquet KV (latest value per
 key wins by version — the same LWW plan as mutations); schemawatch
 reads parquet footers, which is exactly how a Spark target exposes its
 schema, and diffs snapshots declaratively.
+
+The memo store follows the artifact rule (operators/artifact.py) at
+file level: every file is written under a dot-prefixed temp name and
+published complete by one rename, and a published file is never
+changed. Compaction publishes one folded file and then removes only
+the files it read, so it needs no lock and never moves the store
+directory.
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -25,17 +33,7 @@ class Memo:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._seq = 0
         self._last_version = 0
-        # Crash recovery for the compaction swap: a kill between
-        # rename(path -> .old) and rename(.compact -> path) leaves the
-        # data in the side dirs; restore rather than silently starting
-        # empty.
-        if not os.path.isdir(path):
-            for cand in (path + ".compact", path + ".old"):
-                if os.path.isdir(cand):
-                    os.rename(cand, path)
-                    break
 
     # Appends-per-compaction: every put() adds a parquet file, and get()
     # scans all of them; without a bound a long-running streaming job's
@@ -68,82 +66,73 @@ class Memo:
             return [
                 os.path.join(self.path, f)
                 for f in sorted(os.listdir(self.path))
-                if f.endswith(".parquet")
+                if f.endswith(".parquet") and not f.startswith(".")
             ]
         except FileNotFoundError:
             return []
+
+    def _publish(self, cols: dict, prefix: str) -> None:
+        """Write ``cols`` as a new file, visible only once complete. The
+        name is unique (same role as Spark's part-UUID), so concurrent
+        writers in any number of processes never write the same file."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        name = f"{prefix}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, "." + name)
+        pq.write_table(pa.table(cols, schema=self._schema()), tmp)
+        os.rename(tmp, os.path.join(self.path, name))
 
     def put(self, key: str, value: str) -> None:
         # Hybrid version (the HLC pattern): wall clock survives reboots
         # (CLOCK_MONOTONIC restarts at boot and would freeze LWW), and
         # the max() keeps in-process writes monotonic even if NTP steps
         # the clock backwards.
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         self._last_version = max(self._last_version + 1, time.time_ns())
         os.makedirs(self.path, exist_ok=True)
-        t = pa.table(
-            {"k": [key], "v": [value], "version": [self._last_version]},
-            schema=self._schema(),
-        )
-        # Unique append-file name (same role as Spark's part-UUID): two
-        # processes appending concurrently can never collide.
-        pq.write_table(
-            t, os.path.join(self.path, f"part-memo-{uuid.uuid4().hex}.parquet")
-        )
+        self._publish({"k": [key], "v": [value], "version": [self._last_version]}, "part-memo")
         self._maybe_compact()
 
     def _read_all(self):
-        """All (k, v, version) rows across the append log — pyarrow
-        footers + tiny column reads, no Spark job."""
+        """All (k, v, version) rows across the append log, and the files
+        they were read from — pyarrow footers + tiny column reads, no
+        Spark job. A file that vanishes mid-read was folded into a
+        published compacted file first, so the read re-lists and
+        retries."""
         import pyarrow.parquet as pq
 
-        cols = {"k": [], "v": [], "version": []}
-        for f in self._files():
-            t = pq.read_table(f)
-            for c in cols:
-                cols[c].extend(t.column(c).to_pylist())
-        return cols
+        while True:
+            files = self._files()
+            try:
+                tables = [pq.read_table(f) for f in files]
+            except FileNotFoundError:
+                continue
+            cols = {c: [x for t in tables for x in t.column(c).to_pylist()]
+                    for c in ("k", "v", "version")}
+            return cols, files
 
     def _maybe_compact(self) -> None:
-        """Fold the append log into one file once it fragments (single-
-        writer assumption, same as the parquet target snapshots)."""
-        try:
-            n = sum(1 for f in os.listdir(self.path) if f.endswith(".parquet"))
-        except FileNotFoundError:
+        """Fold the append log into one file once it fragments. The
+        folded file is published before the files it replaces are
+        removed, and only files this compaction read are removed, so a
+        concurrent put's file always survives and every value is in
+        some published file at every instant. Two concurrent compactions
+        at worst publish the same rows twice, which LWW by version
+        reads identically. A crash mid-compaction leaves at most one
+        hidden temp file and duplicate rows, never a lost value."""
+        if len(self._files()) <= self.COMPACT_THRESHOLD:
             return
-        if n <= self.COMPACT_THRESHOLD:
-            return
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rows = self._read_all()
-        tmp = self.path + ".compact"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        pq.write_table(
-            pa.table(rows, schema=self._schema()),
-            os.path.join(tmp, "part-memo-compacted.parquet"),
-        )
-        # Crash-safe swap: the live dir is renamed aside, never deleted
-        # before the replacement is in place (a kill between rmtree and
-        # rename would otherwise destroy the durable store).
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        rows, files = self._read_all()
+        self._publish(rows, "part-memo-compacted")
+        for f in files:
+            try:
+                os.remove(f)
+            except FileNotFoundError:
+                pass  # a concurrent compaction already folded it
 
     def get(self, key: str) -> str | None:
-        if not os.path.isdir(self.path):
-            return None
         best: tuple[int, str] | None = None
-        rows = self._read_all()
+        rows, _ = self._read_all()
         for k, v, ver in zip(rows["k"], rows["v"], rows["version"]):
             if k == key and (best is None or ver > best[0]):
                 best = (ver, v)

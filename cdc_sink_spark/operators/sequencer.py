@@ -15,8 +15,6 @@ batch-apply, itself fully parallel).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -69,9 +67,7 @@ def seq_serial(
     resolved: DataFrame,
     key_cols: list[str],
     cfg: ApplyConfig | None = None,
-    apply_fn: Callable | None = None,
     collapse_windows: bool = False,
-    checkpoint_every: int = 8,
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
     """Serial mode (sequencer/core): apply resolved windows in ascending
@@ -100,10 +96,6 @@ def seq_serial(
       fold 9 s, and it is the only one whose job count stays constant
       as frontiers accumulate.)
 
-    ``apply_fn``/``checkpoint_every`` are accepted for backward
-    compatibility; the grouped fold made the checkpoint cadence moot
-    (custom ``apply_fn`` is honored via the collapse path only).
-
     Rejection semantics: CAS- and deadline-rejected mutations under
     serial consistency are FINAL — the CAS ratchet only rises and time
     only moves forward, so unlike besteffort's FK orphans a retry can
@@ -116,27 +108,8 @@ def seq_serial(
     tagged = assign_resolved_windows(muts, resolved, ts_col=ts_col)
     pending = tagged.filter(F.col("resolved_window").isNull()).drop("resolved_window")
     covered = tagged.filter(F.col("resolved_window").isNotNull())
-    window_sensitive = (
-        cfg.cas_columns or cfg.deadlines or cfg.toast_sentinel is not None
-    )
-    if apply_fn is not None and not collapse_windows and window_sensitive:
-        # Collapsing all windows into one apply changes semantics when a
-        # CAS ratchet / deadline / TOAST sentinel interacts across window
-        # boundaries (a collapsed LWW pick can land on a value the
-        # per-window ratchet would have rejected, and a collapsed TOAST
-        # sentinel resolves against the pre-batch target instead of the
-        # prior window's winner). A custom apply_fn only has the
-        # collapsed path, so refuse rather than silently lose
-        # window-serial order.
-        raise ValueError(
-            "apply_fn with cas_columns/deadlines/toast_sentinel requires "
-            "collapse_windows=True (custom apply functions run on the collapsed "
-            "single-batch path, which is not window-serial); drop apply_fn to "
-            "get the grouped fold"
-        )
-    if collapse_windows or apply_fn is not None:
-        apply_fn = apply_fn or apply_mutations
-        snapshot, _ = apply_fn(target, covered.drop("resolved_window"), key_cols, cfg, **kw)
+    if collapse_windows:
+        snapshot, _ = apply_mutations(target, covered.drop("resolved_window"), key_cols, cfg, **kw)
         return snapshot, pending
     snapshot = _serial_grouped_fold(target, covered, key_cols, cfg, **kw)
     return snapshot, pending

@@ -22,28 +22,27 @@ for _mod in _SUITES:
     _ALL_QUERIES.update(_mod.QUERIES)
     _ALL_ORACLES.update(_mod.ORACLES)
 
-# First 50 keys = the driver's gate window (round 14). Rotation policy
-# (r13 VERDICT item 1): every key REWRITTEN in r13 that missed the r13
-# window leads (the window was fixed before the textops/vectors
-# rewrites landed, so those rewrites have only local-gate evidence);
-# then every key round 14 touches (simhash two-tier salting, objstore
-# render-once, CC loop work, q1, spread() probe change in the apply/
-# conveyor/incremental paths); then the remaining r13-touched keys
-# (lever 9 staging, lever 8b parse barrier) that were outside the r13
-# window; then the evidence-oldest remainder (r11/r12 driver-green,
-# untouched). All 50 carry oracles — the 3 rows-only keys (streaming_*,
+# First 50 keys = the external correctness gate's window. Rotation
+# policy: keys changed since their last gate evidence lead, most
+# recently changed group first; then the evidence-oldest remainder
+# (r11/r12 gate-green, untouched), whose last keys rotate out to make
+# room. All 50 carry oracles — the 3 rows-only keys (streaming_*,
 # multimodal) are OUT of the window (r13 VERDICT item 5: a rows-only
 # key burns a sample slot that can never hash_match). The local gate
 # (tools/check_correctness.py) still covers all 121 keys every round.
 _PRIORITY = [
+    # -- rewritten to compare microseconds, no gate evidence since
+    "events_sessionize", "range_join_bucketed",
+    # -- touched this round (versioned artifacts, memo compaction)
+    "dedup_incremental", "objstore_scan_apply",
     # -- r13-rewritten, never driver-oracle-checked since the rewrite
     "ngram_jaccard_pairs", "containment_pairs", "tfidf_top_terms",
     "q11_important_parts", "unigram_logprob_score", "repetition_score",
     "semantic_dedup", "kmeans_refine_step", "ann_ivf_probe",
     "quantize_embeddings_int8",
-    # -- touched this round (14)
-    "dedup_simhash_pairs", "objstore_scan_apply", "dedup_cc_star",
-    "dedup_connected_components", "q1_pricing_summary", "dedup_incremental",
+    # -- touched in round 14
+    "dedup_simhash_pairs", "dedup_cc_star",
+    "dedup_connected_components", "q1_pricing_summary",
     "conveyor_end_to_end", "apply_upsert_delete",
     # -- other r13-touched keys outside the r13 window (local-gate-only)
     "ann_ivf_assign", "bm25_topk", "token_drift_tv", "dedup_minhash_lsh",
@@ -57,16 +56,17 @@ _PRIORITY = [
     "multi_table_temporal_batch", "pii_pattern_scan", "q12_ship_lag_priority",
     "q16_supplier_part_counts", "q20_promo_part_suppliers",
     "q21_waiting_supplier", "script_fanout_dispatch", "seq_serial_batch",
-    "snapshot_diff_feed", "table_checksum_chunks", "training_shuffle_shards",
+    "snapshot_diff_feed",
 ]
-# Rotated out this round (r13 driver-green — see CORRECTNESS_r13.json —
-# and untouched by r14; the local gate still checks every key every
-# round): the whole r13 window head (q13/q2/q8/q9, html_extract_text,
+# Rotated out (r13 gate-green — see CORRECTNESS_r13.json — and
+# untouched since; the local gate still checks every key every round):
+# the whole r13 window head (q13/q2/q8/q9, html_extract_text,
 # cdc_chunk_dedup, ann_topk_bruteforce, ann_lsh_bucketed,
 # doc_fingerprint, token_count, quality_score, lang_id,
 # length_bucket_histogram, stratified_sample, merge_three_way
 # family, seq_besteffort_dlq, apply_schema_evolution, the analytic/
-# TPC-H tier q3..q22, events_*, asof/range joins, value_*), plus
+# TPC-H tier q3..q22, the other events_*, asof joins, value_*),
+# table_checksum_chunks and training_shuffle_shards, plus
 # streaming_mode_switch (rows-only, moved out of the window per r13
 # VERDICT item 5 so the driver samples 50 checkable keys).
 

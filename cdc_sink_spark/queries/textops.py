@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_sink_spark.functions import text as T
+from cdc_sink_spark.operators import artifact
+from cdc_sink_spark.operators.artifact import corpus_fingerprint as _corpus_fingerprint
 from cdc_sink_spark.session import spread as _spread
 
 VARIANT_OFFSET = 1_000_000
@@ -1598,80 +1600,6 @@ ORACLES["dedup_cc_star"] = _cc_sql()
 INCR_DUP_TAU = 0.5
 
 
-def _corpus_fingerprint(sf_dir: str, existing, table: str = "documents") -> dict:
-    """Staleness fingerprint for a persisted derived artifact (the C34
-    band index; r14 also the shared streaming feeds): source-table row
-    count plus file size/mtime plus a CONTENT signal digested from the
-    parquet FOOTER (per-row-group column statistics — min/max,
-    null/value counts, compressed sizes — and the writer id). All of it
-    is O(footers), never a data scan: a full content hash would be
-    exact but costs an O(corpus) text scan per invocation, defeating
-    the O(batch) contract the index exists for. The footer digest
-    closes the mtime-proxy hole (a corpus regenerated to the same byte
-    size with a preserved mtime, e.g. cp -p restore) for any change
-    that moves a column's stats — only a regeneration that keeps every
-    row-group's min/max/sizes identical slips through, which for text
-    corpora means the content is in fact unchanged."""
-    import hashlib as _hashlib
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
-    st = _os.stat(path)
-    files = (
-        sorted(
-            _os.path.join(path, f)
-            for f in _os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        if _os.path.isdir(path)
-        else [path]
-    )
-    h = _hashlib.md5()
-    n_rows = None
-    try:
-        import pyarrow.parquet as _pq
-
-        n_rows = 0
-        for f in files:
-            md = _pq.ParquetFile(f).metadata
-            n_rows += md.num_rows
-            h.update(repr((f.rsplit("/", 1)[-1], md.created_by, md.num_rows)).encode())
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    s = c.statistics
-                    h.update(
-                        repr(
-                            (
-                                c.path_in_schema,
-                                c.total_compressed_size,
-                                s.num_values if s else None,
-                                s.null_count if s else None,
-                                str(s.min)[:64] if s and s.has_min_max else None,
-                                str(s.max)[:64] if s and s.has_min_max else None,
-                            )
-                        ).encode()
-                    )
-        footer_sig = h.hexdigest()
-    except Exception:  # noqa: BLE001 — footer unreadable: fall back to stat-only
-        footer_sig = None
-        n_rows = None
-    # n_docs comes from the SAME footers the digest already read
-    # (parquet num_rows is exact), not a Spark count() — the count was a
-    # full scheduler round-trip per probe invocation for a number the
-    # footer loop had in hand (r13; the Spark job only runs in the
-    # footer-unreadable fallback). Identical value, so fingerprints
-    # stored by earlier builds stay valid.
-    return {
-        "corpus": sf_dir,
-        "n_docs": n_rows if n_rows is not None else existing.count(),
-        "bytes": st.st_size,
-        "mtime_ns": st.st_mtime_ns,
-        "footer_sig": footer_sig,
-    }
-
-
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup: a NEW crawl batch (the corpus's drifted
     variant twins, doc_id >= VARIANT_OFFSET) checked against the
@@ -1685,8 +1613,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     — parquet rowcount is footer metadata, not a scan) and the probe
     join shuffles only the batch side. Output per new doc: is_dup at
     tau, the best-matching indexed doc, and the agreement estimate."""
-    import os as _os
-
     from cdc_sink_spark.operators.lshindex import BandIndex, signatures
 
     existing = _docs(spark, sf_dir).select("doc_id", "text")
@@ -1695,32 +1621,15 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") >= VARIANT_OFFSET)
         .transform(_spread)
     )
-    # Sanitize to a valid unquoted SQL identifier: ANY non-alnum char
-    # becomes "_" (a tempdir tag like "sf1-bench-x2" broke the DDL).
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
-    # Anchor the index under the REPO's spark-warehouse regardless of the
-    # caller's cwd (the grading driver may not run from the repo root,
-    # and a cwd-relative path would write outside the repo).
-    repo_root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
     idx = BandIndex(
         spark,
-        path=_os.path.join(repo_root, "spark-warehouse", f"lsh_band_index_{tag}"),
-        table_name=f"lsh_band_index_{tag}",
+        path=artifact.root("lsh_band_index", sf_dir),
+        table_name=f"lsh_band_index_{artifact.tag(sf_dir)}",
         bucket_cap=LSH_BUCKET_CAP,
     )
-    fp = _corpus_fingerprint(sf_dir, existing)
-    if not idx.exists(fp):
-        # skip_if_current: the exists() above is a lock-free fast path;
-        # build re-checks UNDER the mutation lock, so two concurrent
-        # sessions probing the same sf_dir can't race build vs rmtree on
-        # the shared warehouse path (one builds, the other waits + skips).
-        idx.build(
-            existing.transform(_spread),
-            fingerprint=fp,
-            skip_if_current=True,
-        )
+    # Builds only when no version for this corpus is published; the
+    # corpus side is lazy, so a found index costs no corpus read.
+    idx.build(existing.transform(_spread), fingerprint=_corpus_fingerprint(sf_dir, existing))
     # ONE signature pass over the batch, shared by the probe and the
     # surviving-doc list (recomputing it for `news` would double the
     # per-batch shingle+minhash cost the persisted index exists to cap).

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from cdc_sink_spark.operators.artifact import WAREHOUSE
+
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
@@ -44,10 +46,7 @@ def get_spark(app_name: str = "cdc-sink-spark", shuffle_partitions: int | None =
         # Pin the warehouse inside the repo: saveAsTable/catalog metadata
         # must never land in the caller's cwd (the grading driver may not
         # run from the repo root).
-        .config(
-            "spark.sql.warehouse.dir",
-            os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "spark-warehouse"),
-        )
+        .config("spark.sql.warehouse.dir", WAREHOUSE)
     )
     return builder.getOrCreate()
 

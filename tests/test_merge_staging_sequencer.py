@@ -233,32 +233,6 @@ def test_seq_serial_toast_sentinel_matches_window_loop(spark):
     assert got == {r.id: (r.big, r.small) for r in loop_snap.collect()}
 
 
-def test_seq_serial_rejects_silent_collapse_with_apply_fn(spark):
-    """A custom apply_fn only has the collapsed path; with CAS/deadline
-    config and collapse_windows=False that would silently lose the
-    per-window ratchet — must refuse, not collapse."""
-    import pytest
-
-    from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
-
-    target = spark.createDataFrame([Row(id=1, val=5.0)], "id bigint, val double")
-    muts = _m(spark, [(1, 7.0, 5)], val_type="double")
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=10, logical=0))], "ts struct<nanos:long, logical:int>"
-    )
-    cfg = ApplyConfig(cas_columns=["val"])
-    with pytest.raises(ValueError, match="collapse_windows"):
-        sequencer.seq_serial(
-            target, muts, resolved, ["id"], cfg, ts_col="__ts", apply_fn=apply_mutations
-        )
-    # Explicit collapse_windows=True stays allowed (caller opted in).
-    snap, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], cfg, ts_col="__ts",
-        apply_fn=apply_mutations, collapse_windows=True,
-    )
-    assert {r.val for r in snap.collect()} == {7.0}
-
-
 def test_seq_serial_fold_extras_exclude_window_tag(spark):
     """With cfg.extras configured, the fold's internal resolved_window
     column must NOT be packed into the extras JSON (it would both
@@ -473,7 +447,7 @@ def test_seq_serial_100_windows_bounded(spark):
     )
     target = spark.createDataFrame([], "id bigint, val string")
     snap, pending = sequencer.seq_serial(
-        target, muts, resolved, ["id"], ts_col="__ts", checkpoint_every=8
+        target, muts, resolved, ["id"], ts_col="__ts"
     )
     assert snap.count() == 100 and pending.count() == 0
     snap2, _ = sequencer.seq_serial(

@@ -1204,22 +1204,100 @@ def test_shared_feed_renders_once_and_invalidates(spark, tmp_path, monkeypatch):
     f2 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 1}, render)
     assert f2 == f1 and calls["n"] == 1, "second invocation must reuse the feed"
     # Param change invalidates.
-    runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
+    f3 = runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
     assert calls["n"] == 2
     # Corrupt meta invalidates (truncated write == stale).
-    meta = os.path.join(os.path.dirname(f1), "_meta.json")
+    meta = os.path.join(os.path.dirname(f3), "_meta.json")
     with open(meta, "w") as f:
         f.write("{")
     runtime._shared_feed(spark, sf, "testfeed", {"layout": 2}, render)
     assert calls["n"] == 3
-    # Cleanup the shared dir this test created.
+    # Cleanup the whole artifact root this test created.
     import shutil
 
-    shutil.rmtree(os.path.dirname(f1), ignore_errors=True)
+    root = os.path.dirname(os.path.dirname(f1))
+    shutil.rmtree(root, ignore_errors=True)
     try:
-        os.remove(os.path.dirname(f1) + ".lock")
+        os.remove(root + ".lock")
     except OSError:
         pass
+
+
+def test_shared_feed_survives_rebuild(spark, sf_dir):
+    """A feed path handed out by _shared_feed is never changed again: a
+    call with changed params publishes a new version beside it, and the
+    first path's files keep their original content (a stream still
+    reading them is not pulled out from under)."""
+    import os
+    import shutil
+
+    from cdc_sink_spark.queries import runtime
+
+    calls = {"n": 0}
+
+    def render(d):
+        calls["n"] += 1
+        with open(os.path.join(d, "data.ndjson"), "w") as f:
+            f.write('{"x": %d}\n' % calls["n"])
+
+    f1 = runtime._shared_feed(spark, sf_dir, "survivefeed", {"layout": 1}, render)
+    f2 = runtime._shared_feed(spark, sf_dir, "survivefeed", {"layout": 2}, render)
+    try:
+        assert calls["n"] == 2 and f2 != f1
+        with open(os.path.join(f1, "data.ndjson")) as f:
+            assert f.read() == '{"x": 1}\n'
+        with open(os.path.join(f2, "data.ndjson")) as f:
+            assert f.read() == '{"x": 2}\n'
+    finally:
+        root = os.path.dirname(os.path.dirname(f1))
+        shutil.rmtree(root, ignore_errors=True)
+        try:
+            os.remove(root + ".lock")
+        except OSError:
+            pass
+
+
+def test_artifacts_are_named_with_the_input_tag(spark, sf_dir, tmp_path):
+    """Every entry a shared feed and an incremental-dedup run create
+    under spark-warehouse — lock files, versions, temp dirs — sits under
+    a name carrying the input directory's tag, which is what lets a
+    tool remove all artifacts of one input by name."""
+    import os
+    import shutil
+
+    from cdc_sink_spark.operators import artifact
+    from cdc_sink_spark.queries import runtime, textops
+
+    sf = str(tmp_path / "sf-naming")
+    shutil.copytree(sf_dir, sf)
+    tag = artifact.tag(sf)
+
+    def entries() -> set[str]:
+        out = set()
+        for d, dirs, files in os.walk(artifact.WAREHOUSE):
+            out.update(os.path.relpath(os.path.join(d, n), artifact.WAREHOUSE)
+                       for n in dirs + files)
+        return out
+
+    def render(d):
+        with open(os.path.join(d, "data.ndjson"), "w") as f:
+            f.write('{"x": 1}\n')
+
+    before = entries()
+    try:
+        runtime._shared_feed(spark, sf, "namingfeed", {"layout": 1}, render)
+        assert textops.dedup_incremental(spark, sf).count() > 0
+        created = entries() - before
+        assert created
+        assert all(tag in c.split(os.sep)[0] for c in created), sorted(created)
+    finally:
+        for name in os.listdir(artifact.WAREHOUSE):
+            if tag in name:
+                p = os.path.join(artifact.WAREHOUSE, name)
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+        for t in spark.catalog.listTables():
+            if tag.lower() in t.name:
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def _pinned(spark) -> set[int]:

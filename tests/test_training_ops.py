@@ -319,27 +319,23 @@ def test_band_index_probe_shuffles_only_batch_side(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_bandidx_plan")
 
 
-def test_band_index_append_compact(spark, tmp_path):
-    """Appended deltas are probed without a rebuild; compaction folds
-    them into the bucketed base with identical probe results."""
+def test_band_index_probe_survives_rebuild(spark, tmp_path):
+    """A probe reads the version its instance built, even after another
+    instance on the same root publishes a newer one: the published
+    files and the catalog table behind them never change."""
     from cdc_sink_spark.operators.lshindex import BandIndex
 
-    corpus = _mini_docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta")])
-    day2 = _mini_docs(spark, [(2, "one two three four five six seven eight")])
-    batch = _mini_docs(spark, [(201, "one two three four five six seven eight")])
-    idx = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_ac")
-    idx.build(corpus)
-    assert idx.probe(batch).count() == 0  # day2 not indexed yet
-    idx.append(day2)
-    hits = {(r.new_id, r.old_id) for r in idx.probe(batch).collect()}
-    assert hits == {(201, 2)}
-    idx.compact()
-    import os
-
-    assert not os.path.isdir(str(tmp_path / "idx" / "delta"))
-    hits2 = {(r.new_id, r.old_id) for r in idx.probe(batch).collect()}
-    assert hits2 == {(201, 2)}
-    spark.sql("DROP TABLE IF EXISTS t_bandidx_ac")
+    v1 = _mini_docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta theta")])
+    v2 = _mini_docs(spark, [(2, "one two three four five six seven eight nine ten")])
+    batch = _mini_docs(spark, [(101, "alpha beta gamma delta epsilon zeta eta theta")])
+    a = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_ab")
+    b = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_ab")
+    assert a.build(v1, fingerprint={"v": 1}) is True
+    assert b.build(v2, fingerprint={"v": 2}) is True
+    assert {(r.new_id, r.old_id) for r in a.probe(batch).collect()} == {(101, 1)}
+    assert b.probe(batch).count() == 0
+    for idx in (a, b):
+        spark.sql(f"DROP TABLE IF EXISTS {idx.table}")
 
 
 def test_script_dispatch_many_fanout(spark):
@@ -425,12 +421,11 @@ def test_ansi_edge_cases_no_crash(spark):
 
 
 def test_band_index_lock_and_race_safe_build(spark, tmp_path):
-    """build(skip_if_current=True) re-checks the fingerprint UNDER the
-    mutation lock (two sessions' check-then-build can't race a build
-    against a concurrent rmtree), and a held flock blocks a second
-    builder until released — the kernel releases a crashed holder's
-    flock automatically, so there is no stale-steal heuristic that
-    could evict a live long-running builder."""
+    """build() re-checks the fingerprint UNDER the build lock (two
+    sessions' check-then-build build once), and a held flock blocks a
+    second build until released — the kernel releases a crashed
+    holder's flock automatically, so there is no stale-steal heuristic
+    that could evict a live long-running build."""
     import fcntl
     import os
     import threading
@@ -440,11 +435,11 @@ def test_band_index_lock_and_race_safe_build(spark, tmp_path):
 
     corpus = _mini_docs(spark, [(1, "alpha beta gamma delta epsilon zeta eta")])
     idx = BandIndex(spark, str(tmp_path / "idx"), "t_bandidx_lock")
-    assert idx.build(corpus, fingerprint={"v": 1}, skip_if_current=True) is True
+    assert idx.build(corpus, fingerprint={"v": 1}) is True
     # Same fingerprint: the locked re-check skips the rebuild.
-    assert idx.build(corpus, fingerprint={"v": 1}, skip_if_current=True) is False
+    assert idx.build(corpus, fingerprint={"v": 1}) is False
     # Changed fingerprint still rebuilds.
-    assert idx.build(corpus, fingerprint={"v": 2}, skip_if_current=True) is True
+    assert idx.build(corpus, fingerprint={"v": 2}) is True
 
     # A held flock blocks; releasing it lets the builder proceed. (Two
     # separate os.open() fds have distinct open-file descriptions, so

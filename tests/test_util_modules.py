@@ -285,6 +285,62 @@ def test_memo_compaction_bounds_files_and_survives(spark, tmp_path):
     assert memo.get("other-0") == "x"
 
 
+def test_memo_put_racing_compaction_is_kept(spark, tmp_path):
+    """A second writer's put that lands between compaction's read and
+    its publish survives: compaction removes only the files it read."""
+    from cdc_sink_spark.operators.memo import Memo
+
+    memo = Memo(spark, str(tmp_path / "memo"))
+    other = Memo(spark, str(tmp_path / "memo"))
+    memo.COMPACT_THRESHOLD = 4
+    for i in range(4):
+        memo.put(f"k{i}", str(i))
+    read = memo._read_all
+
+    def read_then_race():
+        out = read()
+        memo._read_all = read  # inject once
+        other.put("late", "kept")
+        return out
+
+    memo._read_all = read_then_race
+    memo.put("k4", "4")  # fifth file: compacts
+    assert memo._read_all is read, "compaction did not run"
+    assert memo.get("late") == "kept"
+    assert [memo.get(f"k{i}") for i in range(5)] == ["0", "1", "2", "3", "4"]
+
+
+def test_artifact_retention_bounds_versions(tmp_path):
+    """Across fingerprint changes on one root at most RETAIN versions
+    remain, and a crashed build's temp dir is removed by the next build."""
+    import os
+
+    import pytest
+
+    from cdc_sink_spark.operators import artifact
+
+    root = str(tmp_path / "art")
+
+    def build(d):
+        with open(os.path.join(d, "x"), "w") as f:
+            f.write("x")
+
+    def crash(d):
+        raise RuntimeError("build died")
+
+    for v in range(5):
+        if v == 2:
+            with pytest.raises(RuntimeError):
+                artifact.publish(root, {"v": "crashed"}, crash)
+        path, built = artifact.publish(root, {"v": v}, build)
+        assert built and path == artifact.lookup(root, {"v": v})
+    names = os.listdir(root)
+    assert not [n for n in names if n.startswith(".")], names
+    assert len(names) <= artifact.RETAIN
+    assert artifact.lookup(root, {"v": 4}) and artifact.lookup(root, {"v": 3})
+    assert artifact.lookup(root, {"v": 0}) is None
+
+
 def test_gate_flags_hugeint_drift(spark, sf_dir):
     """The local gate must catch the round-9 failure class: an un-cast
     integer SUM in the oracle returns HUGEINT from DuckDB (rendered

@@ -29,6 +29,7 @@ Prints one JSON line; SCALE.md carries the rendered table.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -41,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from cdc_sink_spark.operators import artifact
 from cdc_sink_spark.queries import registry
 from cdc_sink_spark.session import get_spark
 
@@ -171,12 +173,10 @@ def main() -> None:
     sf_dir = build_sf1(spark, mult)
     results: dict[str, dict] = {}
     # dedup_incremental persists its band index keyed by the sf_dir tag;
-    # remove it (dir + catalog table) with the temp dataset or every run
-    # leaks a full 10x-corpus index under the repo's spark-warehouse.
-    idx_tag = "lsh_band_index_" + "".join(
-        c if c.isalnum() else "_" for c in sf_dir.strip("/")
-    )
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # remove it (artifact root, lock file, per-version catalog tables)
+    # with the temp dataset or every run leaks a full 10x-corpus index
+    # under the repo's spark-warehouse.
+    idx_root = artifact.root("lsh_band_index", sf_dir)
     try:
         for key in KEYS:
             fn = registry.QUERIES[key]
@@ -202,8 +202,12 @@ def main() -> None:
         print(json.dumps({"mult": mult, "cap": cap, "results": results}))
     finally:
         shutil.rmtree(sf_dir, ignore_errors=True)
-        spark.sql(f"DROP TABLE IF EXISTS {idx_tag}")
-        shutil.rmtree(os.path.join(repo_root, "spark-warehouse", idx_tag), ignore_errors=True)
+        for t in spark.catalog.listTables():
+            if t.name.startswith(os.path.basename(idx_root).lower()):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        shutil.rmtree(idx_root, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.remove(idx_root + ".lock")
 
 
 if __name__ == "__main__":

@@ -167,8 +167,10 @@ def incremental_probe(spark: SparkSession, sf_dir: str) -> dict[str, float]:
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
     n = idx.probe(batch).count()
+    # The index's root, lock file and versions all live under `path`;
+    # the catalog table is per version.
+    spark.sql(f"DROP TABLE IF EXISTS {idx.table}")
     shutil.rmtree(path, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS t_{tag}")
     return {
         "incremental_index_build": t_build,
         "incremental_probe_batch": round(best, 2),
