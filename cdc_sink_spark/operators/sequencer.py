@@ -8,9 +8,9 @@ same key apply in order, distinct keys apply concurrently).
 
 Spark-first: ordering policies become *partitioning + window* choices,
 not thread scheduling. Key-disjoint parallelism is exactly Spark's hash
-partitioning on the key; serial consistency is grouping by resolved
-window and applying windows in ascending order (each window is one
-batch-apply, itself fully parallel).
+partitioning on the key; serial consistency is applying everything at
+or below the resolved frontier, in window order only where the apply
+config can observe that order (CAS, TOAST).
 """
 
 from __future__ import annotations
@@ -67,34 +67,28 @@ def seq_serial(
     resolved: DataFrame,
     key_cols: list[str],
     cfg: ApplyConfig | None = None,
-    collapse_windows: bool = False,
     **kw,
 ) -> tuple[DataFrame, DataFrame]:
     """Serial mode (sequencer/core): apply resolved windows in ascending
     order; mutations beyond the last frontier stay staged.
 
-    Two fully-distributed strategies — no driver-side loop over windows
-    in either (the round-10 review's last ``collect()`` in operators/):
+    The max resolved HLC is read once as a scalar (one tiny job): a
+    mutation at or below it is covered, every other one (all of them
+    when there is no frontier yet) is pending. No driver loop over
+    windows; the strategy follows from ``cfg``:
 
-    - ``collapse_windows=True``: when per-window side effects don't
-      matter (plain LWW apply, no CAS/deadline interplay across window
-      boundaries), all covered windows collapse into ONE apply of every
-      mutation at-or-below the max frontier — same final snapshot, one
-      join.
-    - otherwise a GROUPED per-key fold: windows are disjoint ts
-      intervals and the reference's own scheduler is key-disjoint
-      (util/lockset), so window-serial semantics factor into an
-      independent sequential fold per key. One shuffle on the key
-      brings each key's window winners together; a JVM-side
-      ``F.aggregate`` over the sorted winner array replays the windows
-      in order (CAS ratchet, deletes) against the target row from one
-      outer join. Cost is O(windows-per-key) per key — constant plan
-      depth however many frontiers a day brings, where the old driver
-      loop built one join PER WINDOW. (Measured on 200k rows x 100
-      windows x 20k keys: old driver loop 44 s, a pandas grouped-apply
-      69 s — ~3 ms of invocation overhead PER GROUP — the expression
-      fold 9 s, and it is the only one whose job count stays constant
-      as frontiers accumulate.)
+    - plain LWW (no CAS columns, no TOAST sentinel): window order cannot
+      change the final snapshot, so the covered mutations go through ONE
+      ``apply_mutations`` — no per-row window tag, no fold.
+    - CAS or TOAST: order is semantic (the CAS ratchet only rises; a
+      TOAST placeholder resolves against the PRIOR window's winner).
+      Windows are disjoint ts intervals and the reference's scheduler is
+      key-disjoint (util/lockset), so the covered rows, tagged with their
+      window, replay as an independent fold per key
+      (``_serial_grouped_fold``): a JVM-side ``F.aggregate`` over each
+      key's sorted window winners, with a job count constant in the
+      number of frontiers. (200k rows x 100 windows x 20k keys: the old
+      driver loop 44 s, a pandas grouped-apply 69 s, the fold 9 s.)
 
     Rejection semantics: CAS- and deadline-rejected mutations under
     serial consistency are FINAL — the CAS ratchet only rises and time
@@ -105,13 +99,19 @@ def seq_serial(
     """
     cfg = cfg or ApplyConfig()
     ts_col = kw.get("ts_col", "__ts")
-    tagged = assign_resolved_windows(muts, resolved, ts_col=ts_col)
-    pending = tagged.filter(F.col("resolved_window").isNull()).drop("resolved_window")
-    covered = tagged.filter(F.col("resolved_window").isNotNull())
-    if collapse_windows:
-        snapshot, _ = apply_mutations(target, covered.drop("resolved_window"), key_cols, cfg, **kw)
-        return snapshot, pending
-    snapshot = _serial_grouped_fold(target, covered, key_cols, cfg, **kw)
+    hi = resolved.agg(F.max("ts")).first()[0]
+    covers = F.lit(False)
+    if hi is not None:
+        frontier = F.struct(
+            *[F.lit(hi[f.name]).cast(f.dataType).alias(f.name)
+              for f in muts.schema[ts_col].dataType.fields]
+        )
+        covers = F.coalesce(F.col(ts_col) <= frontier, F.lit(False))
+    covered, pending = muts.filter(covers), muts.filter(~covers)
+    if cfg.cas_columns or cfg.toast_sentinel is not None:
+        tagged = assign_resolved_windows(covered, resolved, ts_col=ts_col)
+        return _serial_grouped_fold(target, tagged, key_cols, cfg, **kw), pending
+    snapshot, _ = apply_mutations(target, covered, key_cols, cfg, **kw)
     return snapshot, pending
 
 

@@ -796,7 +796,7 @@ def multi_table_temporal_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = spark.createDataFrame([], "id bigint, bal double")
         snap, pending = sequencer.seq_serial(
             target, muts, resolved, ["id"], ts_col="__ts",
-            tie_breaker=["__tie"], collapse_windows=True,
+            tie_breaker=["__tie"],
         )
         return snap.agg(
             F.lit(name).alias("src_table"),

@@ -31,9 +31,11 @@ for _mod in _SUITES:
 # key burns a sample slot that can never hash_match). The local gate
 # (tools/check_correctness.py) still covers all 121 keys every round.
 _PRIORITY = [
+    # -- touched this round (serial sequencer: one frontier, one apply)
+    "seq_serial_batch", "multi_table_temporal_batch",
     # -- rewritten to compare microseconds, no gate evidence since
     "events_sessionize", "range_join_bucketed",
-    # -- touched this round (versioned artifacts, memo compaction)
+    # -- touched last round (versioned artifacts, memo compaction)
     "dedup_incremental", "objstore_scan_apply",
     # -- r13-rewritten, never driver-oracle-checked since the rewrite
     "ngram_jaccard_pairs", "containment_pairs", "tfidf_top_terms",
@@ -53,9 +55,9 @@ _PRIORITY = [
     "cdc_parse_ndjson", "mutation_dedup_last_wins", "pack_sequences",
     # -- evidence-oldest remainder (r11/r12 driver evidence, untouched)
     "dedup_exact", "domain_mix_weights", "hlc_order",
-    "multi_table_temporal_batch", "pii_pattern_scan", "q12_ship_lag_priority",
+    "pii_pattern_scan", "q12_ship_lag_priority",
     "q16_supplier_part_counts", "q20_promo_part_suppliers",
-    "q21_waiting_supplier", "script_fanout_dispatch", "seq_serial_batch",
+    "q21_waiting_supplier", "script_fanout_dispatch",
     "snapshot_diff_feed",
 ]
 # Rotated out (r13 gate-green — see CORRECTNESS_r13.json — and

@@ -174,8 +174,14 @@ class _BatchApplier:
             aggs.append(F.collect_set(bucket_col(self.key_cols, self.n_buckets)).alias("touched"))
         return work.agg(*aggs).first()
 
+    _schema = None  # the target's, inferred by the first read only
+
     def _target(self, spark: SparkSession, stats) -> DataFrame:
-        target = spark.read.parquet(self.target_path)
+        """Bucket-pruned target read. Schema inference is a one-task
+        footer job; the schema never changes, so later reads reuse it."""
+        reader = spark.read if self._schema is None else spark.read.schema(self._schema)
+        target = reader.parquet(self.target_path)
+        self._schema = target.schema
         if self.n_buckets:
             target = target.filter(F.col("__kb").isin(stats["touched"])).drop("__kb")
         return target
@@ -329,9 +335,11 @@ class ModeSwitchingApplier(_BatchApplier):
     point, so "switching" is just choosing which sequencer plans THIS
     batch. The three delegates map onto the repo's sequencer operators:
 
-      serial (ModeConsistent)   -> seq_serial, collapse_windows: apply
-                                   only mutations covered by a resolved
-                                   stamp; the rest stay parked.
+      serial (ModeConsistent)   -> seq_serial: apply only mutations
+                                   covered by a resolved stamp (one
+                                   apply, or the per-key window fold
+                                   under CAS/TOAST); the rest stay
+                                   parked.
       besteffort (ModeBestEffort)-> seq_besteffort: apply everything
                                    applicable now, park failures.
 
@@ -407,19 +415,8 @@ class ModeSwitchingApplier(_BatchApplier):
             # drain this batch, so its bucket counts as touched.
             target = self._target(spark, stats)
             if mode == "serial":
-                # Plain LWW collapses all covered windows into one apply;
-                # with CAS configured the per-window ratchet is semantic —
-                # and with a TOAST sentinel the placeholder must resolve
-                # against the PRIOR WINDOW's winner, not the pre-batch
-                # target — so either routes through the grouped per-key
-                # window fold instead.
-                collapse = not (
-                    self.cfg
-                    and (self.cfg.cas_columns or self.cfg.toast_sentinel is not None)
-                )
                 snapshot, left_over = sequencer.seq_serial(
-                    target, work, resolved, self.key_cols, self.cfg,
-                    collapse_windows=collapse, ts_col="__ts",
+                    target, work, resolved, self.key_cols, self.cfg, ts_col="__ts",
                     tie_breaker=self.tie_breaker,
                 )
             else:

@@ -123,6 +123,31 @@ def _m(spark, rows, val_type="string"):
     )
 
 
+def window_loop(target, muts, resolved, key_cols, cfg=None, **kw):
+    """The old per-window driver loop, kept as the semantics oracle for
+    seq_serial: one apply_mutations per resolved window, in order."""
+    from cdc_sink_spark.operators.apply import apply_mutations
+
+    tagged = sequencer.assign_resolved_windows(muts, resolved, ts_col="__ts")
+    snap = target
+    for wts in sorted(
+        r[0] for r in tagged.filter(F.col("resolved_window").isNotNull())
+        .select("resolved_window").distinct().collect()
+    ):
+        batch = tagged.filter(
+            (F.col("resolved_window.nanos") == wts["nanos"])
+            & (F.col("resolved_window.logical") == wts["logical"])
+        ).drop("resolved_window")
+        snap, _ = apply_mutations(snap, batch, key_cols, cfg, ts_col="__ts", **kw)
+    return snap, tagged.filter(F.col("resolved_window").isNull()).drop("resolved_window")
+
+
+def _frontiers(spark, *nanos):
+    return spark.createDataFrame(
+        [Row(ts=Row(nanos=n, logical=0)) for n in nanos], "ts struct<nanos:long, logical:int>"
+    )
+
+
 def test_seq_serial_applies_windows_in_order_and_parks_tail(spark):
     target = spark.createDataFrame([], "id bigint, val string")
     muts = _m(spark, [(1, "w1", 5), (2, "w2", 15), (3, "beyond", 99)])
@@ -141,8 +166,7 @@ def test_seq_serial_grouped_fold_matches_window_loop_cas(spark):
     differ from a collapsed apply: target v=5; window 1 raises it to 7;
     window 2's LWW winner v=6 then FAILS CAS (6 < 7), so serial ends at
     7 while collapsed (one LWW pass -> winner 6 > target 5) ends at 6.
-    The inline loop below is the old driver-side implementation kept as
-    a semantics oracle."""
+    The oracle is the old per-window driver loop (window_loop)."""
     from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
 
     target = spark.createDataFrame([Row(id=1, val=5.0), Row(id=2, val=50.0)],
@@ -159,22 +183,11 @@ def test_seq_serial_grouped_fold_matches_window_loop_cas(spark):
     assert got == {1: 7.0, 2: 60.0}  # id=1: ratchet holds 7; id=2: 41 fails, 60 applies
     assert [r.id for r in pending.collect()] == [3]  # beyond last frontier
 
-    # The old per-window driver loop, as the semantics oracle.
-    tagged = sequencer.assign_resolved_windows(muts, resolved, ts_col="__ts")
-    loop_snap = target
-    for wts in sorted(
-        (r[0] for r in tagged.filter(F.col("resolved_window").isNotNull())
-         .select("resolved_window").distinct().collect())
-    ):
-        batch = tagged.filter(
-            (F.col("resolved_window.nanos") == wts["nanos"])
-            & (F.col("resolved_window.logical") == wts["logical"])
-        ).drop("resolved_window")
-        loop_snap, _ = apply_mutations(loop_snap, batch, ["id"], cfg, ts_col="__ts")
+    loop_snap, _ = window_loop(target, muts, resolved, ["id"], cfg)
     assert got == {r.id: r.val for r in loop_snap.collect()}
-    # And the collapsed path genuinely differs here (ratchet case).
-    collapsed, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], cfg, ts_col="__ts", collapse_windows=True
+    # And one apply of every covered row genuinely differs here (ratchet case).
+    collapsed, _ = apply_mutations(
+        target, muts.filter(F.col("__ts.nanos") <= 20), ["id"], cfg, ts_col="__ts"
     )
     assert {r.id: r.val for r in collapsed.collect()}[1] == 6.0
 
@@ -187,7 +200,7 @@ def test_seq_serial_toast_sentinel_matches_window_loop(spark):
     and NULL when the row doesn't exist yet. Oracle = the old per-window
     driver loop over apply_mutations (whose batch TOAST path is
     independently tested)."""
-    from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
+    from cdc_sink_spark.operators.apply import ApplyConfig
 
     TOAST = "__toast__"
     target = spark.createDataFrame(
@@ -218,18 +231,7 @@ def test_seq_serial_toast_sentinel_matches_window_loop(spark):
     assert got == {1: ("orig1", "n2"), 2: (None, "re"), 3: (None, "new")}
     assert pending.count() == 0
 
-    # Per-window driver loop as the semantics oracle.
-    tagged = sequencer.assign_resolved_windows(muts, resolved, ts_col="__ts")
-    loop_snap = target
-    for wts in sorted(
-        (r[0] for r in tagged.filter(F.col("resolved_window").isNotNull())
-         .select("resolved_window").distinct().collect())
-    ):
-        batch = tagged.filter(
-            (F.col("resolved_window.nanos") == wts["nanos"])
-            & (F.col("resolved_window.logical") == wts["logical"])
-        ).drop("resolved_window")
-        loop_snap, _ = apply_mutations(loop_snap, batch, ["id"], cfg, ts_col="__ts")
+    loop_snap, _ = window_loop(target, muts, resolved, ["id"], cfg)
     assert got == {r.id: (r.big, r.small) for r in loop_snap.collect()}
 
 
@@ -437,25 +439,106 @@ def test_assign_resolved_windows_no_row_blowup(spark):
 
 
 def test_seq_serial_100_windows_bounded(spark):
-    """100 resolved frontiers: the per-window fold must stay tractable
-    (localCheckpoint every k windows truncates the join lineage), and
-    collapse mode produces the identical snapshot in one apply."""
+    """100 resolved frontiers: the grouped per-key fold (forced by a CAS
+    config; every key is new, so CAS accepts every row) stays tractable
+    with its constant plan, and the default one-apply path produces the
+    identical snapshot."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
     muts = _m(spark, [(i, f"v{i}", i) for i in range(1, 101)])
-    resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=0)) for n in range(1, 101)],
-        "ts struct<nanos:long, logical:int>",
-    )
+    resolved = _frontiers(spark, *range(1, 101))
     target = spark.createDataFrame([], "id bigint, val string")
     snap, pending = sequencer.seq_serial(
-        target, muts, resolved, ["id"], ts_col="__ts"
+        target, muts, resolved, ["id"], ApplyConfig(cas_columns=["val"]), ts_col="__ts"
     )
     assert snap.count() == 100 and pending.count() == 0
-    snap2, _ = sequencer.seq_serial(
-        target, muts, resolved, ["id"], ts_col="__ts", collapse_windows=True
-    )
+    snap2, _ = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
     assert {(r.id, r.val) for r in snap2.collect()} == {
         (r.id, r.val) for r in snap.collect()
     }
+
+
+def test_seq_serial_empty_resolved_applies_nothing(spark):
+    """No frontier yet: on both paths the snapshot is the target and
+    every mutation is pending."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    target = spark.createDataFrame([Row(id=1, val="t1"), Row(id=2, val="t2")],
+                                   "id bigint, val string")
+    muts = _m(spark, [(1, "a", 5), (3, "b", 15)])
+    for cfg in (None, ApplyConfig(cas_columns=["val"])):
+        snap, pending = sequencer.seq_serial(
+            target, muts, _frontiers(spark), ["id"], cfg, ts_col="__ts"
+        )
+        assert sorted(map(tuple, snap.collect())) == [(1, "t1"), (2, "t2")], cfg
+        assert sorted(r.id for r in pending.collect()) == [1, 3], cfg
+
+
+def test_seq_serial_frontier_covers_equal_hlc(spark):
+    """A mutation whose HLC equals the max frontier is covered (applied),
+    one just past it is pending, on both paths."""
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    target = spark.createDataFrame([], "id bigint, val string")
+    muts = spark.createDataFrame(
+        [Row(id=1, val="at", __ts=Row(nanos=20, logical=3), __deleted=False),
+         Row(id=2, val="past", __ts=Row(nanos=20, logical=4), __deleted=False)],
+        MUT_SCHEMA,
+    )
+    resolved = spark.createDataFrame([Row(ts=Row(nanos=10, logical=0)),
+                                      Row(ts=Row(nanos=20, logical=3))],
+                                     "ts struct<nanos:long, logical:int>")
+    for cfg in (None, ApplyConfig(cas_columns=["val"])):
+        snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], cfg, ts_col="__ts")
+        assert [tuple(r) for r in snap.collect()] == [(1, "at")], cfg
+        assert [r.id for r in pending.collect()] == [2], cfg
+
+
+def test_seq_serial_deadlines_match_window_loop(spark):
+    """Deadlines without CAS take the one-apply path and match the
+    per-window loop: an expired row drops out of its window and the
+    key's earlier-window winner stands."""
+    import datetime
+
+    from cdc_sink_spark.operators.apply import ApplyConfig
+
+    old, new = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2, 12)
+    target = spark.createDataFrame([Row(id=1, val="t1", seen=new), Row(id=4, val="t4", seen=new)],
+                                   "id bigint, val string, seen timestamp")
+    muts = spark.createDataFrame(
+        [Row(id=i, val=v, seen=d, __ts=Row(nanos=n, logical=0), __deleted=dl)
+         for i, v, d, n, dl in [(1, "w1", new, 5, False), (1, "late", old, 15, False),
+                                (2, "w1", new, 6, False), (2, None, new, 16, True),
+                                (3, "exp", old, 7, False), (4, "w2", new, 17, False),
+                                (5, "tail", new, 25, False)]],
+        "id bigint, val string, seen timestamp, "
+        "__ts struct<nanos:long, logical:int>, __deleted boolean",
+    )
+    resolved = _frontiers(spark, 10, 20)
+    cfg = ApplyConfig(deadlines={"seen": 86400.0})
+    now = datetime.datetime(2024, 1, 3)
+    snap, pending = sequencer.seq_serial(target, muts, resolved, ["id"], cfg, ts_col="__ts",
+                                         now=now)
+    loop_snap, loop_pending = window_loop(target, muts, resolved, ["id"], cfg, now=now)
+    got = {r.id: r.val for r in snap.collect()}
+    assert got == {1: "w1", 4: "w2"}
+    assert got == {r.id: r.val for r in loop_snap.collect()}
+    assert [r.id for r in pending.collect()] == [r.id for r in loop_pending.collect()] == [5]
+
+
+def test_seq_serial_lww_plan_has_no_window_tag(spark):
+    """Without CAS/TOAST the snapshot is one apply over a scalar frontier
+    filter: no per-row window tag, no interpreted frontier lambda and no
+    broadcast nested-loop join in the plan."""
+    from cdc_sink_spark.plans import inspect
+
+    muts = _m(spark, [(i % 3, f"v{i}", i) for i in range(10)])
+    target = spark.createDataFrame([], "id bigint, val string")
+    snap, _ = sequencer.seq_serial(target, muts, _frontiers(spark, 3, 6), ["id"], ts_col="__ts")
+    plan = inspect.executed_plan(snap)
+    for token in ("resolved_window", "filter(", "lambdafunction", "BroadcastNestedLoopJoin"):
+        assert token not in plan, token
+    assert sorted(map(tuple, snap.collect())) == [(0, "v6"), (1, "v4"), (2, "v5")]
 
 
 def test_seq_besteffort_parks_cas_rejected(spark):

@@ -223,43 +223,49 @@ def test_pack_sequences_invariants(spark, docs):
 @settings(**SETTINGS)
 @given(st.data())
 def test_seq_serial_collapse_equals_windowed(spark, data):
-    """collapse_windows=True must produce the same snapshot as the
-    window-by-window fold when there are no CAS/deadline side effects
-    (pure LWW apply commutes across window boundaries)."""
+    """Without CAS/TOAST, seq_serial's one apply of every covered
+    mutation produces the same snapshot and pending tail as the
+    window-by-window driver loop: pure LWW apply commutes across window
+    boundaries, HLC ties included (broken by a tie-breaker column)."""
     from cdc_sink_spark.operators import sequencer
+    from tests.test_merge_staging_sequencer import window_loop
 
     muts_raw = data.draw(
         st.lists(
             st.tuples(
                 st.integers(min_value=0, max_value=4),   # key
                 st.integers(min_value=1, max_value=30),  # nanos
+                st.integers(min_value=0, max_value=1),   # logical
                 st.booleans(),                           # delete
             ),
             min_size=1,
             max_size=25,
         )
     )
-    frontiers = sorted(data.draw(st.sets(st.integers(min_value=1, max_value=30),
-                                         min_size=1, max_size=5)))
+    # A distinct tie per row: HLC ties then have one LWW winner.
+    ties = data.draw(st.permutations(range(len(muts_raw))))
+    frontiers = data.draw(st.sets(st.tuples(st.integers(min_value=1, max_value=30),
+                                            st.integers(min_value=0, max_value=1)),
+                                  min_size=1, max_size=5))
     muts = spark.createDataFrame(
         [
-            Row(id=k, val=f"v{i}", __ts=Row(nanos=n, logical=i), __deleted=dl)
-            for i, (k, n, dl) in enumerate(muts_raw)
+            Row(id=k, val=f"v{i}", tie=t, __ts=Row(nanos=n, logical=lg), __deleted=dl)
+            for i, ((k, n, lg, dl), t) in enumerate(zip(muts_raw, ties))
         ],
-        "id bigint, val string, __ts struct<nanos:long, logical:int>, __deleted boolean",
+        "id bigint, val string, tie int, "
+        "__ts struct<nanos:long, logical:int>, __deleted boolean",
     )
     resolved = spark.createDataFrame(
-        [Row(ts=Row(nanos=n, logical=2**30)) for n in frontiers],
+        [Row(ts=Row(nanos=n, logical=lg)) for n, lg in frontiers],
         "ts struct<nanos:long, logical:int>",
     )
-    target = spark.createDataFrame([], "id bigint, val string")
-    s1, p1 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts")
-    s2, p2 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts",
-                                  collapse_windows=True)
-    assert sorted((r.id, r.val) for r in s1.collect()) == sorted(
-        (r.id, r.val) for r in s2.collect()
-    )
-    assert p1.count() == p2.count()
+    target = spark.createDataFrame([Row(id=0, val="t0"), Row(id=9, val="t9")],
+                                   "id bigint, val string")
+    kw = dict(tie_breaker=["tie"])
+    s1, p1 = sequencer.seq_serial(target, muts, resolved, ["id"], ts_col="__ts", **kw)
+    s2, p2 = window_loop(target, muts, resolved, ["id"], **kw)
+    assert sorted(map(tuple, s1.collect())) == sorted(map(tuple, s2.collect()))
+    assert sorted(r.val for r in p1.collect()) == sorted(r.val for r in p2.collect())
 
 
 doc_st = st.lists(

@@ -1345,6 +1345,27 @@ def test_streaming_applier_reads_batch_once(spark, tmp_path):
     assert ckpts.resolved("t") == (20, 0)
 
 
+def test_target_read_after_first_batch_starts_no_job(spark, tmp_path):
+    """The applier infers its target's schema once: after the first
+    micro-batch, a target read starts no Spark job (inference would be a
+    one-task parquet footer job per batch) and still sees the rows."""
+    target = str(tmp_path / "target")
+    seed = spark.createDataFrame([Row(id=i, v="seed") for i in range(16)], "id bigint, v string")
+    pipeline.init_bucketed_target(seed, target, ["id"], 4)
+    applier = pipeline.StreamingApplier(target, ["id"], n_buckets=4)
+    applier(spark.createDataFrame(
+        [Row(id=1, v="new", __ts=Row(nanos=5, logical=0), __deleted=False)],
+        "id bigint, v string, __ts struct<nanos:long, logical:int>, __deleted boolean",
+    ), 0)
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None).size()
+    df = applier._target(spark, {"touched": [0, 1, 2, 3]})
+    sc.listenerBus().waitUntilEmpty()
+    assert sc.statusStore().jobsList(None).size() == jobs
+    assert {r.id: r.v for r in df.collect()} == {**{i: "seed" for i in range(16)}, 1: "new"}
+
+
 @pytest.mark.parametrize("kind", ["streaming", "mode_switch"])
 def test_appliers_release_per_batch_blocks(spark, tmp_path, kind):
     """Neither applier leaves a persisted or checkpointed block behind

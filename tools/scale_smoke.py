@@ -12,7 +12,8 @@ Cases:
                    frontiers (broadcast sorted-array lookup: zero
                    shuffle of the stream, zero row blowup)
   seq_serial_100w  serial sequencer over 100 resolved windows via the
-                   grouped per-key JVM fold (constant job count)
+                   grouped per-key JVM fold, forced by a CAS config
+                   (constant job count)
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 
 from cdc_sink_spark import workload
 from cdc_sink_spark.operators import msort
-from cdc_sink_spark.operators.apply import apply_mutations
+from cdc_sink_spark.operators.apply import ApplyConfig, apply_mutations
 from cdc_sink_spark.session import get_spark
 from cdc_sink_spark.sources import cdcjson
 
@@ -112,11 +113,14 @@ def main() -> None:
         F.struct(((F.col("id") + 1) * 2_000).alias("nanos"), F.lit(0).cast("int").alias("logical")).alias("ts")
     )
     t0 = time.perf_counter()
+    # Without a CAS/TOAST config seq_serial is one plain apply (apply_big's
+    # shape); the CAS config keeps this case timing the window fold.
     snap5, _ = sequencer.seq_serial(
         spark.createDataFrame([], "key bigint, val bigint"),
         small,
         f100,
         ["key"],
+        ApplyConfig(cas_columns=["val"]),
         ts_col="__ts",
     )
     n6 = snap5.count()
